@@ -303,8 +303,8 @@ def _q_topo_sort(spark, sf_dir):
 def _q_store_roundtrip(spark, sf_dir):
     """Gate the BlockStore write+read path itself (not just the in-session
     graph derivation): append the visible snapshot + edges into a fresh
-    parquet store, read it back through the MVCC snapshot view with a
-    partition-pruned workspace filter, and carry the visible-edge count.
+    parquet store, read it back through the store's cached MVCC snapshot
+    with a workspace filter, and carry the visible-edge count.
     Hash-equal to the same oracle the in-session path answers."""
     import tempfile
 

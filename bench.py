@@ -163,12 +163,12 @@ BASELINE_MEDIANS = {
     # 10.8 / 16.6 → 12.8) — the gate holds the improvement, not the debt
     "ingest_parse": 1.87, "ingest_batch": 10.8, "ingest_incremental": 12.8,
     # e2e_show re-recorded r10 after engine.traverse moved to the persisted
-    # snapshot/edges_snapshot session views (steady-state ~0.8 s; the
+    # visible/visible_edges session frames (steady-state ~0.8 s; the
     # harness median-of-5 includes the cold first request that pays the
     # one-time view build, measured 1.14-1.42 across quiet runs)
     "e2e_find": 0.69, "e2e_show": 1.3,
     # r11 (verdict item 7): the cold FIRST request is now timed separately
-    # (it pays the one-time snapshot/edges_snapshot persisted-view build on
+    # (it pays the one-time visible/visible_edges persisted-frame build on
     # the show path) so the warm keys above measure steady state only.
     # Recorded at the upper quiet-box median of 3 harness reps
     # (find_cold 0.68-0.98, show_cold 2.5-3.6)

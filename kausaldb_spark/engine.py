@@ -7,9 +7,15 @@ the query signature; invalidate-all on any mutation. Here a cache entry holds
 a *materialized* (localCheckpoint-ed) DataFrame — the Spark analogue of the
 reference caching fully-owned result blocks.
 
-Statistics (``src/query/engine.zig:66-131``): per-type counters + latency —
-kept driver-side (cheap, exact); executor-side metrics (rows scanned,
-shuffle bytes) come from Spark's own listeners and are surfaced by bench.py.
+Statistics (``src/query/engine.zig:66-131``): per-type counters + latency,
+kept driver-side (cheap, exact), plus rows scanned/matched from observe()
+counters on the ``with_stats=True`` query variants. Nothing here reads
+Spark's listeners: per-layer Spark figures (jobs, stages, task time,
+shuffle bytes) come from the event log via ``e2ebench/run.py --trace 1``.
+
+Reads: every query reads the store's one cached MVCC frame per store
+version, ``BlockStore.visible()`` / ``visible_edges()``, and scopes a
+workspace with ``.where(codebase == ws)`` on it.
 """
 
 from __future__ import annotations
@@ -128,7 +134,7 @@ class KausalEngine:
         ]
 
     def _codebase_counts(self, codebase: str) -> dict[str, int]:
-        cb_ids = self.store.visible(codebase).select("id")
+        cb_ids = self.store.visible().where(F.col("codebase") == codebase).select("id")
         e = self.store.visible_edges()
         return {
             "blocks": cb_ids.count(),
@@ -295,7 +301,7 @@ class KausalEngine:
 
         abs_by_rel = dict((rel, ap) for ap, rel in files)
         affected = changed + removed
-        vis_cb = self.store.visible(codebase)
+        vis_cb = self.store.visible().where(F.col("codebase") == codebase)
 
         # affected bare names: defs in the OLD versions of changed/removed
         # files (about to be shadowed) ...
@@ -427,7 +433,8 @@ class KausalEngine:
                     "file_idx long, file_path string",
                 )
                 vis_rest = self._path_filter(
-                    self.store.visible(codebase), shadowed, keep=False
+                    self.store.visible().where(F.col("codebase") == codebase),
+                    shadowed, keep=False,
                 )
                 extra_symbols = vis_rest.select(
                     "file_path",
@@ -477,7 +484,7 @@ class KausalEngine:
         reference's unlink removes only metadata, manager.zig:190-205; ours
         tombstones the blocks too — the stronger cleanup its docstring
         defers to 'future versions')."""
-        n = self.store.visible(codebase).count()
+        n = self.store.visible().where(F.col("codebase") == codebase).count()
         if n:
             self.store.tombstone_codebase(codebase)
         reg = self.registry()
@@ -526,14 +533,14 @@ class KausalEngine:
         return self._timed(
             "find_by_name",
             ("find_by_name", workspace, unit_type, name),
-            lambda: lk.find_by_name(self.store.visible(workspace), workspace, unit_type, name),
+            lambda: lk.find_by_name(self.store.visible(), workspace, unit_type, name),
         )
 
     def find_by_file_path(self, workspace: str, file_path: str) -> DataFrame:
         return self._timed(
             "find_by_file_path",
             ("find_by_file_path", workspace, file_path),
-            lambda: lk.find_by_file_path(self.store.visible(workspace), workspace, file_path),
+            lambda: lk.find_by_file_path(self.store.visible(), workspace, file_path),
         )
 
     def keyword_search(self, query: str, threshold: float = 0.7, max_results: int = 500) -> DataFrame:
@@ -575,11 +582,10 @@ class KausalEngine:
         counters: rows_scanned = visible blocks examined (the reference's
         blocks_scanned — its filter loop walks every visible block,
         src/query/filtering.zig:199-296), rows_matched = rows out. The
-        scan-side CollectMetrics pins the count ABOVE the parquet scan, so
-        predicate pushdown is traded for the exact scan count — which is
-        precisely the reference's own cost model; the default path keeps
-        pushdown and skips the counters. Counters land in stats/status()
-        after the caller runs an action (observe adds no extra job)."""
+        scan-side counter sees every visible block — precisely the
+        reference's own cost model; the default path skips the counters.
+        Counters land in stats/status() after the caller runs an action
+        (observe adds no extra job)."""
         if not with_stats:
             return self._timed(
                 "filtered", None,
@@ -619,17 +625,11 @@ class KausalEngine:
         lands in stats/status() after the caller's action."""
 
         def build():
-            # the persisted session views (snapshot/edges_snapshot), not the
-            # parquet-backed derivations: a 1-hop traversal otherwise re-ran
-            # the 3 anti-joins + window as ~20 separate AQE jobs and per-job
-            # overhead dominated the daemon's show latency (r10 profile:
-            # 3.0 s -> ~1.2 s; pushdown buys nothing here — the block join
-            # is a broadcast of the ≤10k reached ids either way)
             reached = tv.bfs(
-                self.store.edges_snapshot(), start_ids, direction, edge_filter,
+                self.store.visible_edges(), start_ids, direction, edge_filter,
                 max_depth, max_results,
             )
-            out = reached.join(self.store.snapshot(), "id")
+            out = reached.join(self.store.visible(), "id")
             if workspace:
                 out = out.where(out.codebase == workspace)
             out = out.select(
@@ -700,14 +700,12 @@ class KausalEngine:
             return self.spark.range(0).selectExpr("'' as path", "0 as depth")
         return self._timed(
             "trace", ("trace", a, b, max_depth),
-            lambda: tv.find_paths_between(self.store.edges_snapshot(), a, b, max_depth=max_depth),
+            lambda: tv.find_paths_between(self.store.visible_edges(), a, b, max_depth=max_depth),
         )
 
     def context_query(self, q: cx.ContextQuery) -> dict[str, DataFrame]:
-        # multi-read flow (anchors + per-rule expansions re-scan both
-        # relations): the persisted session views, per snapshot()'s contract
         return cx.execute_context_query(
-            self.store.snapshot(), self.store.edges_snapshot(), q
+            self.store.visible(), self.store.visible_edges(), q
         )
 
     def register_sql_views(self, prefix: str = "kausal") -> None:

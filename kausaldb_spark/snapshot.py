@@ -20,11 +20,12 @@ ever carries a sequence equal to a block's. We deliberately keep ``>=``
 here because it is the safer comparator if the invariant were ever
 violated (a delete can never be silently lost), matching the oracle twin.
 
-Spark shape: window dedup + broadcast anti-join. The window partitions by
-``id`` — at 100 TB this is one shuffle on the snapshot's natural key, and the
-result is persisted/reused by every read (the LSM engine pays the equivalent
-merge cost on every read instead). Tombstone sets are tiny relative to the
-block set (deletes are rare), so the anti-join broadcasts.
+Spark shape: argmax aggregate per ``id`` + broadcast join. At 100 TB the
+aggregate is one shuffle on the snapshot's natural key, and the result is
+persisted once per store version and reused by every read
+(``BlockStore.visible``; the LSM engine pays the equivalent merge cost on
+every read instead). Tombstone sets are tiny relative to the block set
+(deletes are rare), so the tombstone join broadcasts.
 """
 
 from __future__ import annotations
@@ -33,28 +34,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def latest_versions(blocks_raw: DataFrame) -> DataFrame:
-    """Per id, the highest-sequence version (last writer wins).
+def latest_versions(
+    rows: DataFrame, keys: tuple[str, ...] = ("id",), order: str = "sequence"
+) -> DataFrame:
+    """Per ``keys``, the row with the highest ``order`` (last writer wins).
+    Blocks resolve per ``id`` by ``sequence``; the store's file_state log
+    resolves per ``(codebase, file_path)`` by ``ingest_seq``.
 
-    Physical shape (r12 optimization round, guide §2.4): argmax-per-id as a
-    ``max_by`` hash aggregate — partial (map-side) aggregation collapses
-    co-located versions before the exchange and no Sort is needed, where
-    the previous row_number window shuffled every version row and then
-    sorted each partition. Row-identical: sequences are unique per id (the
-    store's reserve-then-write HWM discipline assigns every batch a fresh
-    range; the graph fixture uses disjoint sequence bands), so the argmax
-    is well-defined. Pinned by the MVCC property tests and the oracle
-    parity sweep (whose DuckDB twin keeps the window formulation)."""
-    cols = blocks_raw.columns  # preserve the input column order exactly
-    others = [c for c in cols if c != "id"]
-    packed = blocks_raw.groupBy("id").agg(
-        F.max_by(F.struct(*others), F.col("sequence")).alias("_s")
+    Physical shape: argmax-per-key as a ``max_by`` hash aggregate — partial
+    (map-side) aggregation collapses co-located versions before the
+    exchange and no Sort is needed, where a row_number window shuffles
+    every version row and then sorts each partition. The order column is
+    unique per key (the store's reserve-then-write HWM discipline gives
+    every batch a fresh range and a batch writes each key once; the graph
+    fixture uses disjoint sequence bands), so the argmax is well-defined.
+    Pinned by the MVCC property tests and the oracle parity sweep (whose
+    DuckDB twin keeps the window formulation)."""
+    cols = rows.columns  # preserve the input column order exactly
+    others = [c for c in cols if c not in keys]
+    packed = rows.groupBy(*keys).agg(
+        F.max_by(F.struct(*others), F.col(order)).alias("_s")
     )
     return packed.select(
-        *[
-            F.col("id") if c == "id" else F.col(f"_s.{c}").alias(c)
-            for c in cols
-        ]
+        *[F.col(c) if c in keys else F.col(f"_s.{c}").alias(c) for c in cols]
     )
 
 

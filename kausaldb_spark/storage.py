@@ -6,13 +6,13 @@ with last-writer-wins reads. Columnar storage gets the same contract from
 append-only parquet + the MVCC snapshot view:
 
 - ``append_blocks`` (S1): assign a monotone sequence batch, append — never
-  rewrite. Blocks are partitioned by ``codebase`` (the workspace filter is a
-  partition-pruned scan, reference F7).
+  rewrite. Blocks are partitioned by ``codebase`` on disk.
 - ``append_edges`` (S2): endpoint existence enforced with two semi-joins
   against the visible snapshot (``src/storage/engine.zig:1207-1217``).
 - ``delete_blocks`` (S3): tombstone append; shadowing happens at read time
   in the snapshot view (``src/storage/tombstone.zig``).
-- reads (S4/S5): ``visible()`` = snapshot view over all appended versions.
+- reads (S4/S5): ``visible()`` / ``visible_edges()`` = the MVCC snapshot
+  over all appended versions, persisted once per store version.
 
 Sequence assignment: each append claims a contiguous batch
 ``[hi+1, hi+n]`` read from the store's current max — the reference's global
@@ -43,7 +43,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
-from kausaldb_spark.snapshot import visible_blocks
+from kausaldb_spark.snapshot import latest_versions, visible_blocks
 
 
 class LeaseHeldError(RuntimeError):
@@ -67,12 +67,9 @@ _EMPTY_REF_NAMES = (
 )
 _EDGE_COLS = ("src", "dst", "edge_type", "codebase", "src_file", "ingest_seq")
 
-# Session-level MVCC snapshot cache: (session id, store path, high-water
-# mark) → persisted visible() frame. Valid because every block/tombstone
-# write RESERVES a new high-water mark before touching data files
-# (reserve-then-write, see append_blocks) — so an unchanged mark implies an
-# unchanged visible set. One entry per store (stale marks are unpersisted on
-# replacement); compact() invalidates explicitly (same mark, new files).
+# Session-level MVCC snapshot cache: (session id, store path, kind, high-water
+# mark, version root) → persisted visible()/visible_edges() frame, one entry
+# per store and kind (see "reads" in BlockStore for the invalidation rule).
 _SNAPSHOT_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -308,6 +305,9 @@ class BlockStore:
                 self._lease_tid = None
                 self._lease_release()
         finally:
+            # the scope's writes have committed (or failed): drop the cached
+            # snapshot frames, whose key may not have moved (see "reads")
+            self._invalidate_snapshot()
             self._lease_tlock.release()
 
     def _lease_release(self) -> None:
@@ -397,16 +397,8 @@ class BlockStore:
 
     def current_file_state(self) -> DataFrame:
         """Last-writer-wins view of file_state (same MVCC rule as blocks)."""
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("codebase", "file_path").orderBy(
-            F.col("ingest_seq").desc()
-        )
-        return (
-            self.file_state()
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
+        return latest_versions(
+            self.file_state(), ("codebase", "file_path"), "ingest_seq"
         )
 
     def record_file_state(self, rows: DataFrame) -> None:
@@ -535,10 +527,6 @@ class BlockStore:
                     out = pinned
                     new_hi = max(hi, base)
                 self._write_hwm(new_hi)  # reserve first — see docstring
-                # explicit, not just mark-keyed: resequence=False can leave
-                # the mark unchanged (incoming max <= current), which would
-                # key a stale hit
-                self._invalidate_snapshot()
                 self._lease_renew()  # the agg above may have eaten lease time
                 out.write.mode("append").partitionBy("codebase").parquet(
                     self._blocks_dir
@@ -546,11 +534,6 @@ class BlockStore:
             finally:
                 if pin:
                     pinned.unpersist()
-            # invalidate AGAIN after the write commits: with an unchanged
-            # mark, a concurrent reader that snapshotted DURING the write
-            # would otherwise have re-populated the cache with the
-            # pre-write visible set and served it until the next mark bump
-            self._invalidate_snapshot()
             return new_hi
 
     def append_edges(
@@ -575,7 +558,7 @@ class BlockStore:
                 edges = edges.withColumn(name, F.lit(None).cast(typ))
         checked = edges.where(F.col("src") != F.col("dst"))
         if not assume_endpoints_exist:
-            ids = self.snapshot().select("id")
+            ids = self._derive_visible().select("id")
             checked = (
                 checked.join(ids, checked.src == ids.id, "left_semi")
                 .join(ids, checked.dst == ids.id, "left_semi")
@@ -593,7 +576,6 @@ class BlockStore:
         with self._writer_lease():
             seq = self.max_sequence() + 1
             self._write_hwm(seq + max(len(block_ids) - 1, 0))  # reserve-then-write
-            self._invalidate_snapshot()
             tomb = self.spark.createDataFrame(
                 [
                     (b, seq + i, (seq + i) * 1000)
@@ -615,10 +597,9 @@ class BlockStore:
         with self._writer_lease():
             seq = self.max_sequence() + 1
             self._write_hwm(seq)  # reserve-then-write (see append_blocks)
-            self._invalidate_snapshot()
-            self._lease_renew()  # the visible() scan below can be long
+            self._lease_renew()  # the snapshot scan below can be long
             tomb = (
-                self.visible()
+                self._derive_visible()
                 .where(predicate)
                 .select(
                     F.col("id").alias("block_id"),
@@ -629,80 +610,72 @@ class BlockStore:
             tomb.write.mode("append").parquet(self._tomb_dir)
 
     def tombstone_codebase(self, codebase: str) -> None:
-        """Unlink a workspace: partition-pruned scan + distributed tombstone
-        write, constant driver memory at any store size."""
+        """Unlink a workspace: one distributed tombstone write, constant
+        driver memory at any store size."""
         self.tombstone_where(F.col("codebase") == codebase)
 
     # -- reads --------------------------------------------------------------
+    # One read path: visible() and visible_edges() return the persisted MVCC
+    # frame for (session, store, high-water mark, version root) — the
+    # memtable-view analogue (the reference serves repeated reads from its
+    # in-memory memtable, src/storage/engine.zig:839-925). Callers scope a
+    # workspace with .where(codebase == ws) on the frame. The key changes
+    # when a block/tombstone write reserves a new mark or a compact (in any
+    # process) flips the root, and every writer-lease scope drops this
+    # store's frames when it exits (see _writer_lease) — which covers
+    # writes that leave the mark unchanged (edges, file_state,
+    # resequence=False appends) and readers that cached mid-write. Writers
+    # that read the snapshot between reserving a mark and committing data
+    # use the uncached _derive_* forms, so no frame is ever keyed to a
+    # mark its data does not include yet.
 
-    def visible(self, codebase: str | None = None) -> DataFrame:
-        """S4: the MVCC snapshot every query reads.
-
-        ``codebase`` scopes the snapshot to one workspace by filtering the
-        raw table BEFORE the last-writer-wins window. The plain
-        ``visible().where(codebase=...)`` form cannot push the predicate past
-        the window (it partitions by id, and Catalyst can't know codebase is
-        functionally dependent on id), so the scan read every workspace; the
-        pre-filter form reaches the parquet scan as a PartitionFilter —
-        workspace queries on a multi-tenant store prune to their partition.
-        Equivalent because every version of an id lives in one codebase:
-        ids are md5(codebase/unit_id) (``sources/ingest.py resolve_and_build``),
-        mirroring the reference's content-addressed block ids
-        (``src/core/types.zig:137-151``). Plan-asserted in
-        tests/test_scale_fixes.py."""
-        with self._pin_root():  # blocks + tombstones from ONE version root
-            raw = self.blocks_raw()
-            if codebase is not None:
-                raw = raw.where(F.col("codebase") == codebase)
-            return visible_blocks(raw, self.tombstones())
-
-    def snapshot(self) -> DataFrame:
-        """The visible() snapshot, persisted once per (session, store,
-        high-water mark) — the memtable-view analogue for repeated reads
-        inside one session (reference ``src/storage/engine.zig`` serves
-        repeated reads from the in-memory memtable the same way).
-
-        Use this for multi-read flows (ingest endpoint checks, bucketed
-        materialization, edge visibility) where the same snapshot is scanned
-        several times; use :meth:`visible` directly when parquet pushdown /
-        partition pruning is the point (point lookups, workspace scans) —
-        a persisted frame plans as InMemoryTableScan, not a pruned parquet
-        scan. Invalidation is automatic: every block/tombstone write bumps
-        the high-water mark first, keying this cache off the old entry.
-        At cluster scale the same role is played by materialize_bucketed;
-        this cache is spill-backed (MEMORY_AND_DISK) and session-local."""
-        # the version ROOT is part of the key: a compact run by ANOTHER
-        # process flips the pointer without changing the mark, and its
-        # second compact GCs the old root — a mark-only key would keep
-        # serving a frame whose lineage lists the GC'd files (a spilled
-        # partition recompute would then FileNotFound). Root change ⇒ miss.
-        key = (
-            id(self.spark), os.path.abspath(self.path),
-            self.max_sequence(), self._root(),
-        )
-        hit = _SNAPSHOT_CACHE.get(key)
-        if hit is not None:
-            return hit
-        for k in [k for k in _SNAPSHOT_CACHE if k[:2] == key[:2] and k != key]:
-            stale = _SNAPSHOT_CACHE.pop(k, None)  # racing evictors: 2nd no-ops
-            if stale is not None:
-                stale.unpersist()
-        snap = self.visible().persist()
-        _SNAPSHOT_CACHE[key] = snap
-        return snap
-
-    def _invalidate_snapshot(self) -> None:
-        """Drop this store's cached snapshot (compact() swaps data files
-        without changing the high-water mark, so the mark alone can't key
-        the invalidation there)."""
-        me = (id(self.spark), os.path.abspath(self.path))
-        for k in [k for k in _SNAPSHOT_CACHE if k[:2] == me]:
-            stale = _SNAPSHOT_CACHE.pop(k, None)  # racing evictors: 2nd no-ops
-            if stale is not None:
-                stale.unpersist()
+    def visible(self) -> DataFrame:
+        """S4: the MVCC snapshot of blocks every query reads."""
+        return self._cached("blocks", self._derive_visible)
 
     def visible_edges(self) -> DataFrame:
-        """Edges with both endpoints visible AND not epoch-shadowed.
+        """Edges with both endpoints visible and not epoch-shadowed (see
+        :meth:`_derive_visible_edges`)."""
+        return self._cached(
+            "edges", lambda: self._derive_visible_edges(self.visible())
+        )
+
+    def _cached(self, kind: str, derive) -> DataFrame:
+        """The persisted ``derive()`` frame for this store version; a miss
+        unpersists the frame of the store's previous version. The root is
+        pinned so the key and the derivation name the same version root —
+        a frame whose lineage lists a GC'd root would FileNotFound on a
+        spilled-partition recompute."""
+        with self._pin_root():
+            key = (
+                id(self.spark), os.path.abspath(self.path), kind,
+                self.max_sequence(), self._root(),
+            )
+            hit = _SNAPSHOT_CACHE.get(key)
+            if hit is not None:
+                return hit
+            self._invalidate_snapshot(kind)
+            frame = derive().persist()
+            _SNAPSHOT_CACHE[key] = frame
+            return frame
+
+    def _invalidate_snapshot(self, kind: str | None = None) -> None:
+        """Unpersist this store's cached frames (of one ``kind``, or all)."""
+        me = (id(self.spark), os.path.abspath(self.path))
+        for k in [
+            k for k in _SNAPSHOT_CACHE if k[:2] == me and kind in (None, k[2])
+        ]:
+            stale = _SNAPSHOT_CACHE.pop(k, None)  # racing evictors: 2nd no-ops
+            if stale is not None:
+                stale.unpersist()
+
+    def _derive_visible(self) -> DataFrame:
+        with self._pin_root():  # blocks + tombstones from ONE version root
+            return visible_blocks(self.blocks_raw(), self.tombstones())
+
+    def _derive_visible_edges(self, blocks: DataFrame) -> DataFrame:
+        """Edges with both endpoints visible in ``blocks`` AND not
+        epoch-shadowed.
 
         Endpoint rule: endpoints existed at insert time (append_edges
         enforces it), and in MVCC an id only becomes invisible via a
@@ -720,7 +693,7 @@ class BlockStore:
         this is a third broadcast anti-join; legacy edges without provenance
         are exempt."""
         with self._pin_root():  # edges/tombstones/file_state from ONE root
-            ids = self.snapshot().select("id")
+            ids = blocks.select("id")
             tomb_ids = self.tombstones().select("block_id").distinct()
             invisible = tomb_ids.join(
                 ids, tomb_ids.block_id == ids.id, "left_anti"
@@ -741,34 +714,6 @@ class BlockStore:
                 & (e.ingest_seq < F.col("_epoch")),
                 "left_anti",
             )
-
-    def edges_snapshot(self) -> DataFrame:
-        """The visible_edges() view, persisted once per (session, store,
-        high-water mark, root) — the edge-side twin of :meth:`snapshot`.
-
-        Why it exists (r10, the e2e_show profile): every traversal
-        re-derived visible_edges from scratch — three broadcast anti-joins,
-        each becoming its own AQE job — so a ONE-hop callers query ran ~20
-        Spark jobs, and per-job overhead (not data) dominated the daemon's
-        show latency. The persisted frame plans as one InMemoryTableScan.
-        Invalidation matches snapshot(): edge/block/tombstone appends bump
-        the high-water mark (reserve-then-write), compact flips the root —
-        either changes the key; _invalidate_snapshot drops both caches."""
-        key = (
-            id(self.spark), os.path.abspath(self.path), "edges",
-            self.max_sequence(), self._root(),
-        )
-        hit = _SNAPSHOT_CACHE.get(key)
-        if hit is not None:
-            return hit
-        me = (id(self.spark), os.path.abspath(self.path), "edges")
-        for k in [k for k in _SNAPSHOT_CACHE if k[:3] == me and k != key]:
-            stale = _SNAPSHOT_CACHE.pop(k, None)  # racing evictors: 2nd no-ops
-            if stale is not None:
-                stale.unpersist()
-        snap = self.visible_edges().persist()
-        _SNAPSHOT_CACHE[key] = snap
-        return snap
 
     # -- cluster-scale layout ----------------------------------------------
 
@@ -810,7 +755,7 @@ class BlockStore:
         # idle; a back-to-back pair of full-width shuffles has no such tail
         # to back-fill. Verified by an interleaved A/B on a stamped-quiet
         # box this round (see OPTIMIZATION_r13.md).
-        snap = self.snapshot()
+        snap = self.visible()
         edges = self.visible_edges()
         self.spark.sparkContext.setJobDescription(
             f"materialize_bucketed: {table_prefix}_blocks_b"
@@ -856,11 +801,12 @@ class BlockStore:
         new_root = os.path.join(self.path, new_version)
         # reads resolve the CURRENT root; writes go ONLY under the new one —
         # recomputation after an executor loss re-reads the intact live store
-        self.visible().write.partitionBy("codebase").parquet(
-            os.path.join(new_root, "blocks")
-        )
+        vis = self._derive_visible()
+        vis.write.partitionBy("codebase").parquet(os.path.join(new_root, "blocks"))
         self._lease_renew()  # the block rewrite is the long pole; re-arm
-        self.visible_edges().write.parquet(os.path.join(new_root, "edges"))
+        self._derive_visible_edges(vis).write.parquet(
+            os.path.join(new_root, "edges")
+        )
         self._lease_renew()  # re-arm between rewrites (ADVICE r8: a compact
         # stalling past the TTL must not reopen the steal window)
         # file_state folds to its latest row per file (epoch history consumed
@@ -894,6 +840,3 @@ class BlockStore:
             # old once a versioned root is itself being superseded
             for d in ("blocks", "edges", "tombstones", "file_state", "ref_names"):
                 shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-        # same visible set, new data files: a cached snapshot would re-read
-        # the superseded paths on cache-partition eviction
-        self._invalidate_snapshot()

@@ -248,6 +248,33 @@ def test_store_pushdown_plan_regression(spark, engine):
     assert "PartitionFilters: [isnotnull(codebase" in plan2
 
 
+def test_warm_reads_scan_the_cached_snapshot(spark, tree, tmp_path_factory, monkeypatch):
+    """A warm engine's find_by_name and registry() read the store's one
+    persisted MVCC frame (InMemoryTableScan), not a fresh parquet
+    derivation per request."""
+    from kausaldb_spark.operators import lookup as lk
+
+    eng = KausalEngine(spark, str(tmp_path_factory.mktemp("store_warm")))
+    eng.link_codebase(tree, "proj")
+    assert eng.find_by_name("proj", "function", "main").count() == 1  # warm
+    plans = {}
+
+    def spy(name, orig):
+        def wrapped(*a, **kw):
+            out = orig(*a, **kw)
+            plans[name] = out._jdf.queryExecution().executedPlan().toString()
+            return out
+        return wrapped
+
+    monkeypatch.setattr(lk, "find_by_name", spy("find_by_name", lk.find_by_name))
+    monkeypatch.setattr(lk, "find_block", spy("registry", lk.find_block))
+    assert "proj" in eng.registry()
+    assert eng.find_by_name("proj", "function", "helper_function").count() == 1
+    assert set(plans) == {"find_by_name", "registry"}
+    for name, plan in plans.items():
+        assert "InMemoryTableScan" in plan, (name, plan)
+
+
 def test_edge_endpoint_enforcement(spark, tmp_path_factory):
     store = str(tmp_path_factory.mktemp("store3"))
     eng = KausalEngine(spark, store)

@@ -122,7 +122,7 @@ def _arm(engine: KausalEngine, point: str) -> None:
 def _visible_state(engine: KausalEngine, codebase: str):
     """Comparable snapshot: visible (unit_id, unit_type, content-md5) and
     visible edges as (src unit_id, dst unit_id, edge_type)."""
-    vis = engine.store.visible(codebase)
+    vis = engine.store.visible().where(F.col("codebase") == codebase)
     blocks = {
         (r["unit_id"], r["unit_type"],
          hashlib.md5(r["content"].encode()).hexdigest())
@@ -494,12 +494,12 @@ def test_compact_renews_lease_and_never_loses_concurrent_appends(spark, tmp_path
     doomed = [r["id"] for r in store.visible().limit(5).collect()]
     store.delete_blocks(doomed)  # give compact real shadowing work
 
-    for name in ("visible", "visible_edges", "current_file_state"):
+    for name in ("_derive_visible", "_derive_visible_edges", "current_file_state"):
         orig = getattr(store, name)
 
-        def slow(orig=orig, **kw):
+        def slow(*a, orig=orig, **kw):
             _time.sleep(2.0)
-            return orig(**kw)
+            return orig(*a, **kw)
 
         setattr(store, name, slow)
     renews = [0]

@@ -86,9 +86,27 @@ def test_snapshot_matches_model(spark, ops):
           suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow])
 @given(ops=_ops)
 def test_latest_versions_is_lww(spark, ops):
-    """Invariant: latest_versions keeps exactly one row per id, the max
-    sequence (durability of the last write — properties.zig's durability
-    invariant)."""
+    """Invariant: latest_versions keeps exactly one row per key, the max
+    order value (durability of the last write — properties.zig's durability
+    invariant), for both store uses: blocks per id by sequence, and the
+    file_state log per (codebase, file_path) by ingest_seq."""
+    # file_state: ids 0-3 and 4-7 share file paths across two codebases, so
+    # both key columns matter; a delete op is a removal row (hash NULL)
+    fs_rows = [
+        (f"c{bid // 4}", f"f{bid % 4}.py",
+         None if kind == "delete" else str(payload), seq)
+        for seq, (kind, bid, payload) in enumerate(ops, start=1)
+    ]
+    fs = spark.createDataFrame(
+        fs_rows,
+        "codebase string, file_path string, content_hash string, ingest_seq bigint",
+    )
+    cur = latest_versions(fs, ("codebase", "file_path"), "ingest_seq")
+    assert cur.columns == fs.columns
+    got_fs = {(r[0], r[1]): (r[2], r[3]) for r in cur.collect()}
+    want_fs = {(cb, fp): (h, seq) for cb, fp, h, seq in fs_rows}  # last wins
+    assert got_fs == want_fs
+
     blocks = [
         (f"b{bid}", seq, "u", "function", "x", "w", "x.py", "{}", str(payload))
         for seq, (kind, bid, payload) in enumerate(ops, start=1)

@@ -213,29 +213,6 @@ def test_hwm_reserved_before_data_write(spark, tmp_path_factory, monkeypatch):
     assert store2.visible().count() == 5
 
 
-def test_point_lookup_pushes_filter_through_mvcc_window(spark, tmp_path_factory):
-    """An id-filtered read of the MVCC snapshot must reach the parquet scan
-    as PushedFilters (the filter commutes with the per-id dedup window) —
-    the plan property that makes point lookups on a 100 TB store touch one
-    row group instead of scanning the table."""
-    store_path = str(tmp_path_factory.mktemp("store_push"))
-    store = BlockStore(spark, store_path)
-    store.append_blocks(_mk_blocks(spark, 20))
-    plan = store.visible().where(F.col("id") == "b7")._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan
-    import re
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-    assert any("id" in p and ("EqualTo" in p or "IsNotNull" in p) for p in pushed), plan
-    # workspace scoping must use the PRE-window form: a .where() above the
-    # snapshot cannot commute with the id-partitioned window, so
-    # visible(codebase=...) filters blocks_raw first and the predicate
-    # reaches the scan as a PartitionFilter (partition pruning)
-    plan2 = store.visible(codebase="cb")._jdf.queryExecution().executedPlan().toString()
-    assert any(
-        "codebase" in p for p in re.findall(r"PartitionFilters: \[([^\]]*)\]", plan2)
-    ), plan2
-
-
 def test_stratified_sample_two_phase_exact_and_salted(spark):
     """r6: stratified_sample must not funnel a whole language class through
     one sort task. The plan must window over (pred_lang, _strat_salt) on
@@ -275,32 +252,49 @@ def test_stratified_sample_two_phase_exact_and_salted(spark):
 
 
 def test_snapshot_cache_hit_and_invalidation(spark, tmp_path_factory):
-    """BlockStore.snapshot() memoizes the persisted visible frame per
-    high-water mark; any block/tombstone write (including the
-    resequence=False append that can leave the mark unchanged) and
-    compact() must invalidate it so readers never see a stale snapshot."""
+    """BlockStore.visible() and visible_edges() memoize one persisted frame
+    per store version; any block/tombstone write (including the
+    resequence=False append that can leave the mark unchanged), any edge
+    write, and compact() must invalidate them so readers never see a stale
+    snapshot."""
     store = BlockStore(spark, str(tmp_path_factory.mktemp("snapcache")))
     store.append_blocks(_mk_blocks(spark, 3))
-    s1 = store.snapshot()
+    s1 = store.visible()
     assert s1.count() == 3
-    assert store.snapshot() is s1  # same mark -> same cached frame
+    assert store.visible() is s1  # same mark -> same cached frame
 
     # resequence=False with max(seq) <= current mark: mark unchanged,
-    # cache must STILL invalidate (explicit writer-side invalidation)
+    # cache must STILL invalidate (the writer lease drops it on exit)
     store.append_blocks(_mk_blocks(spark, 1, start_seq=1), resequence=False)
-    assert store.snapshot() is not s1
-    assert store.snapshot().count() == 3  # b1 re-put shadows b1 (same id)
+    assert store.visible() is not s1
+    assert store.visible().count() == 3  # b1 re-put shadows b1 (same id)
 
     store.append_blocks(_mk_blocks(spark, 2, start_seq=10))
-    assert store.snapshot().count() == 5
+    assert store.visible().count() == 5
+
+    # edges: an edge append leaves the mark unchanged, a delete moves it
+    e1 = store.visible_edges()
+    assert e1.count() == 0
+    assert store.visible_edges() is e1
+    store.append_edges(
+        spark.createDataFrame(
+            [("b1", "b10", "calls"), ("b2", "b10", "calls")],
+            "src string, dst string, edge_type string",
+        )
+    )
+    assert store.visible_edges() is not e1
+    assert store.visible_edges().count() == 2
 
     store.delete_blocks(["b10"])
-    assert store.snapshot().count() == 4
+    assert store.visible().count() == 4
+    assert store.visible_edges().count() == 0  # both edges lost their dst
 
-    s2 = store.snapshot()
+    s2, e2 = store.visible(), store.visible_edges()
     store.compact()
-    assert store.snapshot() is not s2  # file swap invalidates
-    assert store.snapshot().count() == 4
+    assert store.visible() is not s2  # file swap invalidates
+    assert store.visible_edges() is not e2
+    assert store.visible().count() == 4
+    assert store.visible_edges().count() == 0
 
 
 def test_append_edges_validation_modes(spark, tmp_path_factory):

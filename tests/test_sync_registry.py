@@ -249,7 +249,7 @@ def test_sync_equals_fresh_link(spark, tmp_path_factory):
             .collect()
         }
 
-    def edges_snapshot(e, cb):
+    def visible_edge_set(e, cb):
         ids = e.store.visible().where(F.col("codebase") == cb).select("id")
         ev = e.store.visible_edges()
         ev = ev.join(ids, ev.src == ids.id, "left_semi")
@@ -270,7 +270,7 @@ def test_sync_equals_fresh_link(spark, tmp_path_factory):
         assert blocks_snapshot(eng, "cb") == blocks_snapshot(fresh, "cb"), (
             f"block divergence after step {i}: {action} {name}"
         )
-        assert edges_snapshot(eng, "cb") == edges_snapshot(fresh, "cb"), (
+        assert visible_edge_set(eng, "cb") == visible_edge_set(fresh, "cb"), (
             f"edge divergence after step {i}: {action} {name}"
         )
         shutil.rmtree(fresh_store, ignore_errors=True)
