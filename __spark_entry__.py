@@ -723,8 +723,8 @@ def _q_hashed_features(spark, sf_dir):
 def _q_pq_recall(spark, sf_dir):
     # recall@5 of the product-quantization/ADC path (Jegou et al. 2011) vs
     # the exact baseline — the bytes-per-vector compression dial next to
-    # lsh_recall (buckets) and ivf_recall (probes). Codebooks are trained
-    # in-query (k-means: rows-only gate like semantic_dedup); ADC scoring
+    # lsh_recall (buckets). Codebooks are trained in-query (k-means:
+    # rows-only gate like semantic_dedup); ADC scoring
     # itself is integer-exact and pytest-pinned against a brute-force
     # model (tests/test_pq.py). rerank=50 exercises the
     # shortlist-then-exact refinement, the production configuration.

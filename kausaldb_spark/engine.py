@@ -40,6 +40,12 @@ CACHE_TTL_SEC = 30 * 60
 # observation pairs retained while waiting for the caller's action; beyond
 # this, the oldest (likely abandoned) instrumented queries are dropped
 _PENDING_OBS_MAX = 256
+# traverse()'s result columns: a show relation whose target names nothing
+# returns zero rows of this shape, so its header matches a hit's
+_TRAVERSE_SCHEMA = (
+    "id string, depth int, unit_type string, unit_id string, "
+    "codebase string, source_uri string, content string"
+)
 
 # Workspace registry lives IN the store as a config block with a fixed id —
 # the reference's exact pattern (deterministic metadata BlockId 0x111...1 +
@@ -649,12 +655,16 @@ class KausalEngine:
         )
         return self._timed("traverse", key, build)
 
+    def _no_anchor(self) -> DataFrame:
+        """Zero rows in traverse()'s columns. A local relation: no Spark job."""
+        return self.spark.createDataFrame([], _TRAVERSE_SCHEMA)
+
     def find_callers(self, workspace: str, name: str, max_depth: int = 1) -> DataFrame:
         anchors = [
             r["id"] for r in self.find_by_name(workspace, "function", name).collect()
         ] or [r["id"] for r in self.find_by_name(workspace, "type", name).collect()]
         if not anchors:
-            return self.store.visible().limit(0)
+            return self._no_anchor()
         return self.traverse(
             anchors, tv.INCOMING, tv.EdgeFilter.include("calls", "calls_method"),
             max_depth, workspace=workspace,
@@ -665,7 +675,7 @@ class KausalEngine:
             r["id"] for r in self.find_by_name(workspace, "function", name).collect()
         ]
         if not anchors:
-            return self.store.visible().limit(0)
+            return self._no_anchor()
         return self.traverse(
             anchors, tv.OUTGOING, tv.EdgeFilter.include("calls", "calls_method"),
             max_depth, workspace=workspace,
@@ -678,7 +688,7 @@ class KausalEngine:
         for ut in ("function", "type", "const"):
             anchors += [r["id"] for r in self.find_by_name(workspace, ut, name).collect()]
         if not anchors:
-            return self.store.visible().limit(0)
+            return self._no_anchor()
         return self.traverse(
             anchors, tv.BIDIRECTIONAL,
             tv.EdgeFilter.include("references", "imports", "depends_on"),

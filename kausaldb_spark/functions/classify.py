@@ -233,19 +233,3 @@ def nb_score(counts, priors, docs, n_buckets: int = NB_BUCKETS,
     return out.withColumn(
         "pred_good", (F.col("margin_bits") > 0).cast("int")
     )
-
-
-def nb_quality(docs, good_sources, n_buckets: int = NB_BUCKETS,
-               text_col: str = "text", id_col: str = "doc_id",
-               source_col: str = "source"):
-    """Weak-supervision bootstrap: label good = membership in
-    ``good_sources`` (the "wikipedia vs crawl" practice), train the integer
-    NB on the whole corpus, score the whole corpus. One text pass for
-    training, one for scoring."""
-    labeled = docs.withColumn(
-        "_lab", F.col(source_col).isin(*good_sources).cast("int")
-    )
-    counts, priors = nb_train(
-        labeled, "_lab", n_buckets, text_col, id_col
-    )
-    return nb_score(counts, priors, docs, n_buckets, text_col, id_col)

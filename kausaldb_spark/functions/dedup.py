@@ -11,8 +11,8 @@ Pipeline shapes (all shuffle-conscious):
 - **n-gram Jaccard**: inverted-index candidates via *rare* shingles
   (document-frequency cap keeps hub shingles from exploding the pair count —
   the classic df-cut) → exact Jaccard verify.
-- **SimHash**: 16-bit signature per doc (functions.text.simhash16);
-  distance-0 pairs via signature groupBy.
+- **SimHash**: 16-bit signature per doc (bit j = md5 nibble j >= 8, summed
+  over tokens, majority sign); distance-0 pairs via signature groupBy.
 
 The min-hash family (scheme v2, r10) draws its random bits from ONE md5
 per shingle and spreads seeds with universal integer mixes — engine-portable
@@ -642,7 +642,7 @@ def simhash_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance-0 on one band is the groupBy-only special case.)"""
     corpus = dedup_corpus(spark, sf_dir)
     # same explode+groupBy chunked-int formulation as _simhash64_signatures
-    # (bit j = md5 nibble j >= 8 — nibble bit 3 — i.e. simhash16's definition)
+    # (bit j = md5 nibble j >= 8 — nibble bit 3 — majority sign over tokens)
     ex = (
         corpus.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
         .select("doc_id", *_md5_chunk_cols(F.md5(F.col("tok"))))

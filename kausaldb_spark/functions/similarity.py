@@ -12,7 +12,7 @@ Two paths:
   path trading recall for a corpus-partition-pruned scan. Buckets are
   computable per-row (no fitting), so the corpus can be *written* partitioned
   by bucket and the probe becomes partition pruning.
-- ``cosine_topk``: float cosine via built-in array ops (zip_with/aggregate)
+- ``float_cosine``: float cosine via built-in array ops (zip_with/aggregate)
   for real use; not oracle-gated (float).
 """
 
@@ -163,25 +163,6 @@ def lsh_recall(
     return _recall_vs_exact(exact, approx)
 
 
-def ivf_recall(
-    embeddings: DataFrame, query_ids: list[int], k: int = 5,
-    n_clusters: int | None = None, n_probe: int = 4, seed: int = 42,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    fit_sample_fraction: float | None = None,
-) -> DataFrame:
-    """Recall@k of the IVF path vs the exact baseline — :func:`lsh_recall`'s
-    twin for the learned-partition scale path (the probe-count dial).
-    Pytest-gated (k-means is not SQL-expressible): full probe is pinned to
-    recall_ppm == 1e6 exactly, partial probe to the metric's invariants."""
-    exact = dot_topk(embeddings, query_ids, k=k, id_col=id_col, vec_col=vec_col)
-    approx = ivf_topk(
-        embeddings, query_ids, k=k, n_clusters=n_clusters, n_probe=n_probe,
-        seed=seed, id_col=id_col, vec_col=vec_col,
-        fit_sample_fraction=fit_sample_fraction,
-    )
-    return _recall_vs_exact(exact, approx)
-
-
 def _recall_vs_exact(exact: DataFrame, approx: DataFrame) -> DataFrame:
     """(query_id, n_exact, n_approx, n_hit, recall_ppm) from two ranked
     (query_id, neighbor_id, …) frames. All joins/aggregates run over
@@ -315,7 +296,7 @@ def _fit_kmeans(feats, n_clusters: int, seed: int,
     """Fit MLlib k-means on ``feats`` or, with ``fit_sample_fraction`` set,
     on a seeded Bernoulli sample of it — the 100 TB shape: centroids from a
     bounded sample, ``transform`` over the full corpus (centroid quality
-    converges long before the full pass; the paper-standard IVF/SemDeDup
+    converges long before the full pass; the paper-standard SemDeDup
     training recipe). Falls back to the full fit when the sample is too
     small to carry ``n_clusters`` distinct centers.
 
@@ -343,201 +324,6 @@ def _fit_kmeans(feats, n_clusters: int, seed: int,
         return km.fit(pinned)
     finally:
         pinned.unpersist()
-
-
-def ivf_topk(
-    embeddings: DataFrame, query_ids: list[int], k: int = 5,
-    n_clusters: int | None = None, n_probe: int = 4, seed: int = 42,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    fit_sample_fraction: float | None = None,
-) -> DataFrame:
-    """IVF-style approximate top-k: k-means-partition the corpus, probe only
-    the ``n_probe`` centroids nearest each query. The second scale path next
-    to sign-LSH: learned partitions follow the data distribution, so probes
-    prune better on clustered corpora (at cluster scale the corpus is
-    *written* partitioned by centroid id and a probe is partition pruning).
-
-    Scoring matches dot_topk (quantized integer dot products), so recall is
-    directly measurable against the exact baseline. Requires pyspark.ml
-    (guarded import — returns the brute-force result if MLlib is absent).
-    """
-    try:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector, vector_to_array
-    except ImportError:  # pragma: no cover - mllib always ships with pyspark
-        return dot_topk(embeddings, query_ids, k, id_col, vec_col)
-
-    if n_clusters is None:
-        # IVF convention k ~ sqrt(n): probed fraction n_probe/k shrinks as
-        # the corpus grows instead of staying fixed (auto-scaled like
-        # sign-LSH bits; the r7 sf1 rehearsal motivated the same for
-        # semantic_dedup)
-        import math
-
-        n_clusters = max(4, math.isqrt(max(1, embeddings.count())))
-    feats = embeddings.select(
-        F.col(id_col), F.col(vec_col),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    )
-    model = _fit_kmeans(feats, n_clusters, seed, fit_sample_fraction)
-    assigned = model.transform(feats).select(
-        F.col(id_col), F.col(vec_col), F.col("prediction").alias("centroid")
-    )
-
-    # centroid table is tiny: rank each query's centroids by distance driver-side
-    centers = [c.tolist() for c in model.clusterCenters()]
-    q_rows = (
-        embeddings.where(F.col(id_col).isin(query_ids))
-        .select(F.col(id_col).alias("query_id"), F.col(vec_col))
-        .collect()
-    )
-    probe_pairs = []
-    for r in q_rows:
-        v = list(r[vec_col])
-        dists = sorted(
-            range(len(centers)),
-            key=lambda c: sum((float(a) - b) ** 2 for a, b in zip(v, centers[c])),
-        )
-        for c in dists[:n_probe]:
-            probe_pairs.append((r["query_id"], c))
-    spark = embeddings.sparkSession
-    probes = spark.createDataFrame(probe_pairs, "query_id long, centroid int")
-
-    q = (
-        embeddings.where(F.col(id_col).isin(query_ids))
-        .select(F.col(id_col).alias("query_id"), quantized(F.col(vec_col)).alias("qv"))
-        .join(probes, "query_id")
-    )
-    corpus = assigned.select(
-        F.col(id_col).alias("neighbor_id"), quantized(F.col(vec_col)).alias("cv"), "centroid"
-    )
-    scored = (
-        F.broadcast(q)
-        .join(corpus, "centroid")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", int_dot(F.col("qv"), F.col("cv")).alias("dot"))
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "dot")
-    )
-
-
-def ivf_index(
-    embeddings: DataFrame, path: str, n_clusters: int | None = None,
-    seed: int = 42, id_col: str = "vec_id", vec_col: str = "embedding",
-    fit_sample_fraction: float | None = None,
-) -> dict:
-    """Persist the corpus as an IVF index: parquet PARTITIONED BY the
-    learned centroid id, with the centroid table in a JSON sidecar. This
-    is the shape the ad-hoc :func:`ivf_topk` docstring promises at scale
-    — the corpus is WRITTEN partitioned by centroid, so a probe becomes
-    parquet partition PRUNING: querying n_probe of k partitions reads
-    n_probe/k of the corpus off disk, no full scan, no shuffle
-    (asserted in tests via PartitionFilters in the scan plan).
-
-    The analogue of ``dedup.minhash_index`` for the ANN path: build once
-    per corpus (or per append batch), probe many. Returns the metadata
-    dict (also written to ``path/_ivf_meta.json``)."""
-    from pyspark.ml.functions import array_to_vector
-
-    if n_clusters is None:
-        import math
-
-        n_clusters = max(4, math.isqrt(max(1, embeddings.count())))
-    feats = embeddings.select(
-        F.col(id_col), F.col(vec_col),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    )
-    model = _fit_kmeans(feats, n_clusters, seed, fit_sample_fraction)
-    assigned = model.transform(feats).select(
-        F.col(id_col), F.col(vec_col), F.col("prediction").alias("centroid")
-    )
-    assigned.write.mode("overwrite").partitionBy("centroid").parquet(path)
-    meta = {
-        "n_clusters": int(n_clusters),
-        "seed": int(seed),
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "centers": [[float(x) for x in c] for c in model.clusterCenters()],
-    }
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_ivf_meta.json"), "w", encoding="utf-8") as f:
-        _json.dump(meta, f)
-    return meta
-
-
-def ivf_topk_vs_index(
-    spark, path: str, queries: list[tuple[int, list[float]]], k: int = 5,
-    n_probe: int = 4,
-) -> DataFrame:
-    """Probe a persisted :func:`ivf_index`: rank centroids per query
-    driver-side (the centroid table is tiny — sqrt(n) rows), then scan
-    ONLY the probed partitions (`centroid IN (...)` prunes at the parquet
-    layer) and score with the same quantized integer dot as
-    :func:`dot_topk`. ``queries`` is a bounded driver-side list of
-    (query_id, vector) — the serving-path contract (queries arrive from
-    outside the corpus; probing corpus rows by id is one lookup away).
-
-    Output (query_id, neighbor_id, rank, dot), identical schema to
-    ivf_topk/dot_topk so recall is directly comparable."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_ivf_meta.json"), encoding="utf-8") as f:
-        meta = _json.load(f)
-    centers = meta["centers"]
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-
-    probe_pairs = []
-    probed = set()
-    for qid, v in queries:
-        dists = sorted(
-            range(len(centers)),
-            key=lambda c: sum((float(a) - b) ** 2 for a, b in zip(v, centers[c])),
-        )
-        for c in dists[:n_probe]:
-            probe_pairs.append((int(qid), int(c)))
-            probed.add(int(c))
-    probes = spark.createDataFrame(probe_pairs, "query_id long, centroid int")
-    qdf = spark.createDataFrame(
-        [(int(qid), [float(x) for x in v]) for qid, v in queries],
-        f"query_id long, {vec_col} array<float>",
-    ).select("query_id", quantized(F.col(vec_col)).alias("qv"))
-
-    # the IN-list on the PARTITION column is what turns the probe into
-    # partition pruning — only n_probe/k of the data files are opened
-    corpus = (
-        spark.read.parquet(path)
-        .where(F.col("centroid").isin(sorted(probed)))
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            quantized(F.col(vec_col)).alias("cv"),
-            "centroid",
-        )
-    )
-    scored = (
-        F.broadcast(qdf.join(probes, "query_id"))
-        .join(corpus, "centroid")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id", int_dot(F.col("qv"), F.col("cv")).alias("dot")
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "dot"
-        )
-    )
 
 
 def embedding_near_duplicates(
@@ -647,8 +433,8 @@ def semantic_dedup(
     expected cluster size stays bounded: n_clusters ~ N / target). The
     pair relation is duplication-rate-sized; components come from the same
     bounded union-find / distributed-WCC fallback as near_dup_clusters.
-    Like ``ivf_topk`` this is pytest-pinned (k-means is not
-    SQL-expressible for the DuckDB oracle).
+    This is pytest-pinned (k-means is not SQL-expressible for the DuckDB
+    oracle).
 
     ``with_dropped=True`` returns ``(verdicts, dropped)`` where dropped is
     the (kc, _n) relation of skipped over-cap clusters — same visibility
@@ -816,8 +602,8 @@ def semantic_dedup(
 # ANN path
 # ---------------------------------------------------------------------------
 
-#: persisted-index schema version — an index written by a different code
-#: scheme must be REFUSED loudly, same contract as dedup's minhash sig_v
+#: codebook schema version — a codebook built by a different code scheme
+#: must be REFUSED loudly, same contract as dedup's minhash sig_v
 PQ_VERSION = 1
 
 
@@ -872,8 +658,9 @@ def pq_train(
     Determinism: exact for a fixed data layout (the seeded sample and the
     ``limit`` row choice depend on partition order, like MLlib's own
     sampled fits); codebooks are centroids, so layout changes perturb
-    them only marginally — persist the index (:func:`pq_index`) when
-    bit-identical codes must survive a re-partition."""
+    them only marginally — keep the returned codebook and pass it back
+    (``pq_topk(book=...)``) when bit-identical codes must survive a
+    re-partition."""
     import numpy as np
 
     rows = embeddings.select(F.col(vec_col).alias("_v"))
@@ -988,8 +775,7 @@ def pq_topk(
     embeddings: DataFrame, query_ids: list[int], k: int = 5, m: int = 8,
     n_codes: int = 16, seed: int = 42, rerank: int | None = None,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    book: dict | None = None, codes: DataFrame | None = None,
-    fit_sample_fraction: float | None = None,
+    book: dict | None = None, fit_sample_fraction: float | None = None,
 ) -> DataFrame:
     """Approximate top-k by PQ asymmetric distance (ADC): queries keep
     their exact subvectors, corpus rows are scored through the m-byte
@@ -1012,8 +798,7 @@ def pq_topk(
         raise ValueError(
             f"pq index version {book.get('pq_v')} != code version {PQ_VERSION}"
         )
-    if codes is None:
-        codes = pq_encode(embeddings, book, id_col=id_col, vec_col=vec_col)
+    codes = pq_encode(embeddings, book, id_col=id_col, vec_col=vec_col)
     m = book["m"]
 
     spark = embeddings.sparkSession
@@ -1095,11 +880,11 @@ def pq_recall(
     id_col: str = "vec_id", vec_col: str = "embedding",
     fit_sample_fraction: float | None = None,
 ) -> DataFrame:
-    """Recall@k of the PQ/ADC path vs the exact baseline — the third
-    recall dial next to lsh_recall (buckets) and ivf_recall (probes); PQ's
-    dial is bytes-per-vector (m, n_codes) and the rerank depth. Rows-only
-    driver gate (k-means is not SQL-expressible); pytest pins the metric's
-    invariants and the rerank==corpus-size exactness."""
+    """Recall@k of the PQ/ADC path vs the exact baseline — the recall dial
+    next to lsh_recall (buckets); PQ's dial is bytes-per-vector (m,
+    n_codes) and the rerank depth. Rows-only driver gate (k-means is not
+    SQL-expressible); pytest pins the metric's invariants and the
+    rerank==corpus-size exactness."""
     exact = dot_topk(embeddings, query_ids, k=k, id_col=id_col, vec_col=vec_col)
     approx = pq_topk(
         embeddings, query_ids, k=k, m=m, n_codes=n_codes, seed=seed,
@@ -1107,56 +892,6 @@ def pq_recall(
         fit_sample_fraction=fit_sample_fraction,
     )
     return _recall_vs_exact(exact, approx)
-
-
-def pq_index(
-    embeddings: DataFrame, path: str, m: int = 8, n_codes: int = 16,
-    seed: int = 42, id_col: str = "vec_id", vec_col: str = "embedding",
-    fit_sample_fraction: float | None = None,
-) -> dict:
-    """Persist the PQ index: the codes relation as parquet plus the
-    codebooks in a JSON sidecar, version-stamped. ivf_index's analogue for
-    the compression path — build once per corpus, query many; the codes
-    file is ~m bytes/vector, so the steady-state ANN working set never
-    touches the full vectors except for reranking."""
-    import json as _json
-    import os as _os
-
-    book = pq_train(
-        embeddings, m=m, n_codes=n_codes, seed=seed, vec_col=vec_col,
-        fit_sample_fraction=fit_sample_fraction,
-    )
-    pq_encode(embeddings, book, id_col=id_col, vec_col=vec_col).write.mode(
-        "overwrite"
-    ).parquet(path)
-    meta = dict(book, id_col=id_col, vec_col=vec_col, seed=seed)
-    with open(_os.path.join(path, "_pq_meta.json"), "w", encoding="utf-8") as f:
-        _json.dump(meta, f)
-    return meta
-
-
-def pq_topk_vs_index(
-    spark, path: str, embeddings: DataFrame, query_ids: list[int],
-    k: int = 5, rerank: int | None = None,
-) -> DataFrame:
-    """Query a persisted PQ index. Refuses a version-mismatched index
-    loudly (same contract as the MinHash sig_v guard) instead of returning
-    silently wrong distances."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_pq_meta.json"), encoding="utf-8") as f:
-        meta = _json.load(f)
-    if meta.get("pq_v") != PQ_VERSION:
-        raise ValueError(
-            f"persisted pq index version {meta.get('pq_v')} != code version "
-            f"{PQ_VERSION}; rebuild the index with pq_index()"
-        )
-    codes = spark.read.parquet(path)
-    return pq_topk(
-        embeddings, query_ids, k=k, book=meta, codes=codes, rerank=rerank,
-        id_col=meta["id_col"], vec_col=meta["vec_col"],
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1200,61 +935,4 @@ def hashed_features(
         .groupBy(id_col, "dim")
         .agg(F.sum("sign").cast("bigint").alias("weight"))
         .where(F.col("weight") != 0)
-    )
-
-
-def hashed_embeddings(
-    corpus: DataFrame, d: int = 64, id_col: str = "doc_id",
-    text_col: str = "text", normalize: bool = True,
-) -> DataFrame:
-    """(doc_id, embedding array<float>) — the dense, L2-normalized form of
-    :func:`hashed_features`, shaped to feed this module's ANN family
-    directly (dot_topk / lsh / ivf / pq all accept it via id_col/vec_col).
-    Dense assembly is a per-doc map lookup over sequence(0, d-1); a doc
-    whose features fully cancel (or an empty doc) yields the zero vector —
-    ``hashed_features`` drops its rows, so the dense side is left-joined
-    back to ``corpus``'s id column (a slim id-only join; at scale AQE
-    broadcasts whichever side is the sliver) so every input doc stays
-    addressable by the ANN consumers instead of silently vanishing. The
-    zero vector survives normalization unchanged (norm 0 branch below)."""
-    sparse = hashed_features(corpus, d, id_col=id_col, text_col=text_col)
-    grouped = corpus.select(id_col).join(
-        sparse.groupBy(id_col).agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("dim", "weight"))
-            ).alias("_m")
-        ),
-        id_col,
-        "left",
-    ).withColumn(
-        "_m",
-        F.coalesce(
-            F.col("_m"),
-            F.map_from_entries(
-                F.array().cast("array<struct<dim:int,weight:bigint>>")
-            ),
-        ),
-    )
-    emb = F.transform(
-        F.sequence(F.lit(0), F.lit(d - 1)),
-        lambda i: F.coalesce(
-            F.element_at(F.col("_m"), i.cast("int")), F.lit(0).cast("bigint")
-        ).cast("double"),
-    )
-    out = grouped.select(F.col(id_col), emb.alias("_e"))
-    if not normalize:
-        return out.select(
-            F.col(id_col), F.col("_e").cast("array<float>").alias("embedding")
-        )
-    norm = F.sqrt(
-        F.aggregate(
-            F.col("_e"), F.lit(0.0), lambda acc, x: acc + x * x
-        )
-    )
-    return out.select(
-        F.col(id_col),
-        F.when(norm > 0, F.transform(F.col("_e"), lambda x: x / norm))
-        .otherwise(F.col("_e"))
-        .cast("array<float>")
-        .alias("embedding"),
     )

@@ -332,37 +332,6 @@ def compression_ratio(
 N_SIMHASH_BANDS = 4  # 4 x 16-bit salted bands = a 64-bit signature
 
 
-def simhash16(toks: Column, salt: str = "") -> Column:
-    """16-bit SimHash over tokens (with multiplicity). Bit j of a token's
-    hash = (hex nibble j of md5(salt || token)) >= 8; document bit j =
-    majority sign. Pure column expr, bit-identical in DuckDB (same md5,
-    same nibble test). ``salt`` selects an independent hash family — the
-    64-bit signature is four salted 16-bit bands.
-
-    Single-pass formulation: one md5 per token, accumulated into an array of
-    16 signed sums (the naive 16-aggregates version hashes every token 16×
-    — measured ~3× slower at sf0.1).
-    """
-    def step(acc, t):
-        h = F.md5(F.concat(F.lit(salt), t)) if salt else F.md5(t)
-        contrib = F.transform(
-            F.sequence(F.lit(0), F.lit(15)),
-            lambda j: F.when(
-                F.substring(h, j + 1, 1).isin(*"89abcdef"), F.lit(1)
-            ).otherwise(F.lit(-1)),
-        )
-        return F.zip_with(acc, contrib, lambda a, c: a + c)
-
-    sums = F.aggregate(
-        toks, F.array_repeat(F.lit(0), 16), step
-    )
-    total = None
-    for j in range(16):
-        bit = F.when(F.element_at(sums, j + 1) >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-        total = bit if total is None else total + bit
-    return total.cast("int")
-
-
 def simhash64_bands(toks: Column) -> list[Column]:
     """The four 16-bit bands of the 64-bit SimHash, all derived from ONE
     md5 per token: signature bit j uses bit (j mod 2) of hex nibble (j div 2)
@@ -456,46 +425,6 @@ def fingerprint(toks: Column, n: int = 5, k: int = 4) -> Column:
     sh = shingles(toks, n)
     hashed = F.transform(sh, lambda s: F.md5(s))
     return F.concat_ws("|", F.slice(F.array_sort(hashed), 1, k))
-
-
-# ---------------------------------------------------------------------------
-# unigram LM quality scoring (CCNet-style typicality filter)
-# ---------------------------------------------------------------------------
-
-def unigram_lm_scores(docs, text_col: str = "text", alpha: float = 1.0):
-    """Per-document unigram language-model score over the corpus's own
-    token distribution — the CCNet/KenLM-style "typicality" quality signal
-    (docs whose tokens are corpus-typical score a higher mean log-prob;
-    boilerplate-free rare-token junk scores low). Returns
-    DataFrame[doc_id, n_tokens, avg_logprob, ppl] with add-``alpha``
-    smoothing.
-
-    Scale shape: explode → vocab count (one shuffle, map-side combined) →
-    token⨝vocab equi-join (shuffle by token; at cluster scale the vocab is
-    Zipf-headed so AQE's skew split applies) → per-doc mean (shuffle by
-    doc_id). Everything JVM-side; floats only in the final ln (this is a
-    ranking signal, not an oracle-gated integer)."""
-    toks = docs.select("doc_id", F.explode(tokens(F.col(text_col))).alias("tok"))
-    vocab = toks.groupBy("tok").agg(F.count("*").alias("c"))
-    totals = vocab.agg(
-        F.sum("c").alias("n_total"), F.count("*").alias("v_size")
-    )
-    scored = (
-        toks.join(vocab, "tok")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "doc_id",
-            F.log(
-                (F.col("c") + F.lit(alpha))
-                / (F.col("n_total") + F.lit(alpha) * F.col("v_size"))
-            ).alias("logp"),
-        )
-    )
-    return scored.groupBy("doc_id").agg(
-        F.count("*").cast("bigint").alias("n_tokens"),
-        F.avg("logp").alias("avg_logprob"),
-        F.exp(-F.avg("logp")).alias("ppl"),
-    )
 
 
 def mix_sources(docs, weights: dict[str, float], key_col: str = "doc_id",
@@ -651,7 +580,7 @@ def bm25_topk(docs, query_terms: list[str], k: int = 20, k1: float = 1.2,
     is two corpus scans (stats + score) and no exchange of corpus rows.
 
     Floats by nature — ranking is pytest-pinned against a brute-force
-    reference, not oracle-hash-gated (same policy as unigram_lm_scores).
+    reference, not oracle-hash-gated.
     Output: (doc_id, n_terms, score, rank)."""
     toks = tokens(F.col(text_col))
     tfs = _per_term_tf(toks, query_terms)

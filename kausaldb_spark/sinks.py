@@ -193,29 +193,6 @@ def shard_digests(
     )
 
 
-def read_training_shards(
-    spark: SparkSession, path: str, shard: int | None = None, id_col: str = "doc_id"
-) -> DataFrame:
-    """Read the sharded layout back in training order. With ``shard=K`` only
-    that directory is scanned (partition pruning on the shard column); the
-    within-shard order is reconstructed from the persisted ``_key`` column
-    (a per-shard local sort — never global).
-
-    The hash repartition on ``shard`` is load-bearing: the file scan
-    bin-packs files from DIFFERENT shard directories into size-ordered
-    splits (and ``maxRecordsPerFile`` splits one shard across files), so a
-    bare ``sortWithinPartitions`` would only order each arbitrary scan
-    split, not each shard. Re-keying by shard puts every shard's rows in
-    exactly one partition (mirroring the writer's layout), after which the
-    local sort yields true (shard, _key) iteration order."""
-    df = spark.read.parquet(path)
-    if shard is not None:
-        df = df.where(F.col("shard") == int(shard))
-    return df.repartition(F.col("shard")).sortWithinPartitions(
-        "shard", "_key", id_col
-    )
-
-
 def verify_shards(spark: SparkSession, path: str, id_col: str = "doc_id") -> bool:
     """Recompute shard digests and compare against the manifest. Returns
     True when every shard matches (count + digest); raises ValueError with
@@ -303,8 +280,8 @@ def compact_parquet_dataset(
     - verification BEFORE anyone reads it: source and destination row
       counts must match or the compact raises (and removes nothing);
     - the swap is the caller's move (local FS: rename; object store:
-      versioned prefix + manifest flip — same caveat as
-      streaming/corpus.compact_minhash_index).
+      versioned prefix + manifest flip, because rename is not atomic
+      there).
 
     Returns {rows, src: stats, dst: stats}."""
     import math

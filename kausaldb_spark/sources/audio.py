@@ -249,29 +249,6 @@ def audio_stats(assets: DataFrame, id_col: str = "asset_id",
     )
 
 
-def audio_coverage(assets: DataFrame) -> DataFrame:
-    """Per-(format, mode, decodable) counts — decode_coverage's audio
-    sibling: one header-sniff Arrow pass, shuffle carries classification
-    tuples only."""
-
-    def batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for payload in pdf["payload"]:
-                fmt, mode, _sr, _ch, ok = probe_audio_format(
-                    bytes(payload) if payload is not None else b""
-                )
-                rows.append((fmt, mode, ok))
-            yield pd.DataFrame(rows, columns=["format", "mode", "decodable"])
-
-    return (
-        assets.select("payload")
-        .mapInPandas(batch_fn, "format string, mode string, decodable boolean")
-        .groupBy("format", "mode", "decodable")
-        .agg(F.count("*").cast("bigint").alias("n_assets"))
-    )
-
-
 # --- deterministic audio-corpus synthesis (the audio_stats fixture) ---------
 # Ten structurally REAL minimal containers, one per class k = id % 10,
 # spanning the decode boundary from both sides. Sample payloads use

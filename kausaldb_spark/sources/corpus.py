@@ -188,15 +188,6 @@ def read_documents(
     return _READERS[fmt](spark, path, **kw)
 
 
-def write_jsonl_documents(df: DataFrame, path: str, n_files: int | None = None) -> None:
-    """JSONL export (interchange with non-Spark tools). ``n_files`` bounds
-    the output file count via coalesce — no shuffle, no global sort."""
-    out = df.select(*[c for c in DOC_COLS if c in df.columns])
-    if n_files:
-        out = out.coalesce(int(n_files))
-    out.write.mode("overwrite").json(path)
-
-
 def diff_documents(
     old: DataFrame, new: DataFrame, id_col: str = "doc_id",
     text_col: str = "text",

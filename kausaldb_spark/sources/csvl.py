@@ -102,15 +102,6 @@ def parse_csv_lines(lines: DataFrame, line_col: str = "line",
     )
 
 
-def read_csv_documents(spark, path: str) -> DataFrame:
-    """Conformant documents from headerless CSV files on disk:
-    spark.read.text (parallelism = file splits) into parse_csv_lines —
-    repeated headers from naive shard concatenation are quarantined, not
-    mis-parsed."""
-    lines = spark.read.text(path).select(F.col("value").alias("line"))
-    return parse_csv_lines(lines)
-
-
 # --- deterministic fixture (the csv_ingest oracle) ---------------------------
 # Six line classes built in PURE CODEGEN off the documents table; the
 # DuckDB twin predicts every output row from (doc_id, text, lang, source,

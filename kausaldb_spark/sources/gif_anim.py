@@ -220,9 +220,9 @@ def sample_gif_frames(
 
     Scale shape: one Arrow `mapInPandas` pass, decode bounded by
     ``max_frames * stride`` frames per asset regardless of tail length
-    (the parser stops early), per-row error isolation identical to
-    `multimodal.decode_image_stats`. The groupBy-free output keeps this
-    stage map-only: it rides the corpus scan.
+    (the parser stops early), per-row error isolation (an undecodable
+    asset yields an ``err`` row, never a failed batch). The groupBy-free
+    output keeps this stage map-only: it rides the corpus scan.
     """
     if stride < 1:
         raise ValueError("stride must be >= 1")

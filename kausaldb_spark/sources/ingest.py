@@ -13,9 +13,8 @@ parser has no JVM builtin, so this is the legitimate Pandas-UDF tier), and
 resolution is a pair of DataFrame joins (exact qualified name, then
 same-file fallback) — never a driver-side loop over units.
 
-At 100 TB (monorepo-scale ingest): file listing comes from a manifest table
-instead of os.walk; parse stays embarrassingly parallel (one file never
-spans partitions); the resolver joins shuffle by symbol name — skew on hub
+At scale: parse stays embarrassingly parallel (one file never spans
+partitions); the resolver joins shuffle by symbol name — skew on hub
 names (e.g. ``main``) is why the symbol table keeps (codebase, name) as the
 key, bounding any one group by the codebase size.
 """
@@ -634,15 +633,13 @@ _COMBINED_SCHEMA = StructType(
 
 def parse_files(
     spark: SparkSession,
-    files: list[tuple[str, str]] | DataFrame,
+    files: list[tuple[str, str]],
     max_file_size: int = MAX_FILE_SIZE,
     materialize: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Distributed parse: (units_df, raw_edges_df). Each partition parses its
-    file subset inside one Python worker (Arrow-batched). ``files`` is a
-    driver-side (abs_path, rel_path) list for directory ingest, or a
-    DataFrame[abs_path, file_path] manifest for monorepo-scale ingest where
-    the listing itself is a table.
+    file subset inside one Python worker (Arrow-batched). ``files`` is the
+    driver-side (abs_path, rel_path) listing.
 
     Both outputs are filtered projections of ONE combined parse relation
     (each ``_parse_source`` call yields units AND edges — the previous
@@ -652,19 +649,16 @@ def parse_files(
     the link/sync ingestion paths use this; the default stays lazy for
     callers that only ever force one side.
 
-    The size cap is enforced HERE, not only in list_files: the manifest path
-    has no listing step, and resolve_and_build's 1M sequence stride relies
+    The size cap is enforced HERE, not only in list_files: a caller may
+    pass its own listing, and resolve_and_build's 1M sequence stride relies
     on every file being <= MAX_FILE_SIZE (a multi-MiB file could exceed 1M
     units and collide sequence ranges). Oversize files become a single
     parse_error marker block."""
 
-    if isinstance(files, DataFrame):
-        paths_df = files.select("abs_path", "file_path")
-    else:
-        n_part = max(1, min(len(files), 32))
-        paths_df = spark.createDataFrame(
-            files, "abs_path string, file_path string"
-        ).repartition(n_part)
+    n_part = max(1, min(len(files), 32))
+    paths_df = spark.createDataFrame(
+        files, "abs_path string, file_path string"
+    ).repartition(n_part)
 
     def _read_capped(ap: str) -> tuple[str | None, str | None]:
         """(source, error) — error set for unreadable or oversize files."""
@@ -710,20 +704,17 @@ def parse_files(
 
 
 def file_hashes(
-    spark: SparkSession, files: list[tuple[str, str]] | DataFrame
+    spark: SparkSession, files: list[tuple[str, str]]
 ) -> DataFrame:
     """(file_path, content_hash) — md5 of raw bytes, computed on executors
     (the change-detection pass of incremental sync; reading beats parsing by
     an order of magnitude, and unchanged files are never parsed)."""
     import hashlib
 
-    if isinstance(files, DataFrame):
-        paths_df = files.select("abs_path", "file_path")
-    else:
-        n_part = max(1, min(len(files), 32)) if files else 1
-        paths_df = spark.createDataFrame(
-            files, "abs_path string, file_path string"
-        ).repartition(n_part)
+    n_part = max(1, min(len(files), 32)) if files else 1
+    paths_df = spark.createDataFrame(
+        files, "abs_path string, file_path string"
+    ).repartition(n_part)
 
     def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -893,28 +884,6 @@ def resolve_and_build(
         .join(ids, edges.dst == ids.id, "left_semi")
     )
     return blocks, edges
-
-
-def ingest_manifest(
-    spark: SparkSession, manifest: DataFrame, codebase: str,
-    sequence_base: int = 0,
-) -> tuple[DataFrame, DataFrame]:
-    """Monorepo-scale ingest: the file listing is a DataFrame[abs_path,
-    file_path] (e.g. a build-system manifest table), never a driver list.
-    The per-file index for sequence assignment is a row_number over the
-    one-row-per-file manifest ordered by path — a narrow single pass over
-    file COUNT (not unit count), the only global ordering the pipeline
-    needs; parsing and resolution stay fully distributed."""
-    from pyspark.sql.window import Window
-
-    file_index = manifest.select("file_path").distinct().select(
-        "file_path",
-        (F.row_number().over(Window.orderBy("file_path")) - 1)
-        .cast("bigint")
-        .alias("file_idx"),
-    )
-    units, raw_edges = parse_files(spark, manifest)
-    return resolve_and_build(units, raw_edges, codebase, sequence_base, file_index)
 
 
 def ingest_directory(

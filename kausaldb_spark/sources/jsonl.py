@@ -91,14 +91,6 @@ def parse_jsonl(lines: DataFrame, line_col: str = "line",
     )
 
 
-def read_jsonl_documents(spark, path: str) -> DataFrame:
-    """Conformant documents from JSONL files on disk: spark.read.text
-    (parallelism = file splits, the layout a real corpus arrives in)
-    into parse_jsonl."""
-    lines = spark.read.text(path).select(F.col("value").alias("line"))
-    return parse_jsonl(lines)
-
-
 # --- deterministic fixture (the jsonl_ingest oracle) -------------------------
 # Six line classes built in PURE CODEGEN off the documents table; the
 # DuckDB twin predicts every output row from (doc_id, text, lang, source,

@@ -1,5 +1,5 @@
 """Multimodal asset columns: images/audio/video as opaque binary + typed
-metadata, with Arrow-batched decode/feature/transform stages.
+metadata, with Arrow-batched decode, probe and hash stages.
 
 Schema contract: an asset row is
     (asset_id string, kind string, payload binary, meta map<string,string>)
@@ -18,8 +18,7 @@ lossless JPEG, r12 the arithmetic-coded DCT modes (SOF9/SOFA via
 jpeg_arith's QM coder). The remaining boundary — arithmetic-lossless and
 hierarchical JPEG, unknown containers — stays behind an explicit
 NotImplementedError; each decoder is pinned against an INDEPENDENT
-test-side encoder. The deterministic fake decoder remains the default for
-the synthetic-asset plumbing tests.
+test-side encoder.
 
 Scale notes: decode is the classic CPU-bound embarrassing-parallel stage —
 ``repartition`` by asset_id to spread codec cost, and keep batch size bounded
@@ -38,8 +37,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
-    IntegerType,
-    LongType,
     MapType,
     StringType,
     StructField,
@@ -52,24 +49,6 @@ ASSET_SCHEMA = StructType(
         StructField("kind", StringType()),
         StructField("payload", BinaryType()),
         StructField("meta", MapType(StringType(), StringType())),
-    ]
-)
-
-IMAGE_FEATURES_SCHEMA = StructType(
-    [
-        StructField("asset_id", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_bytes", LongType()),
-        StructField("content_hash", StringType()),
-    ]
-)
-
-FRAME_SAMPLE_SCHEMA = StructType(
-    [
-        StructField("asset_id", StringType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("frame_hash", StringType()),
     ]
 )
 
@@ -1396,242 +1375,6 @@ def decode_pixels(data: bytes):
     if h == 0 or w == 0:
         raise ValueError(f"image has zero dimension ({h}x{w})")
     return img
-
-
-def _decode_image_real(payload: bytes):
-    """Real-codec path for extract_image_features: decode pixels (PNG/BMP)
-    and report (width, height)."""
-    img = decode_pixels(payload)
-    return img.shape[1], img.shape[0]
-
-
-def _decode_image_fake(payload: bytes) -> tuple[int, int]:
-    """Deterministic stand-in: first 8 hex-encoded bytes are width/height."""
-    return int(payload[:2].hex(), 16), int(payload[2:4].hex(), 16)
-
-
-def extract_image_features(assets: DataFrame, use_real_codec: bool = False) -> DataFrame:
-    """Decode + feature-extract stage (mapInPandas; payload stays in Arrow
-    buffers between JVM and Python)."""
-
-    def batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode = _decode_image_real if use_real_codec else _decode_image_fake
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                data = bytes(payload)
-                w, h = decode(data)
-                rows.append((aid, w, h, len(data), hashlib.md5(data).hexdigest()))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGE_FEATURES_SCHEMA.fields]
-            )
-
-    return (
-        assets.where(F.col("kind") == "image")
-        .select("asset_id", "payload")
-        .mapInPandas(batch_fn, IMAGE_FEATURES_SCHEMA)
-    )
-
-
-IMAGE_STATS_SCHEMA = StructType(
-    [
-        StructField("asset_id", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("mean_luma_ppm", LongType()),
-        StructField("err", StringType()),
-    ]
-)
-
-
-def decode_image_stats(assets: DataFrame) -> DataFrame:
-    """REAL pixel-decode stage (PNG/BMP): dimensions, channel count, and
-    mean luma (Rec.601 integer weights, ppm-scaled — no float aggregates)
-    per image. Undecodable payloads (JPEG/GIF/corrupt) land with an ``err``
-    string instead of poisoning the batch — per-row isolation, the same
-    contract as ingest's parse_error markers. mapInPandas keeps payloads in
-    Arrow buffers; decode cost is embarrassingly parallel."""
-    import numpy as np
-
-    def batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    img = decode_pixels(bytes(payload))
-                    h, w, ch = img.shape
-                    px = img.astype(np.int64)
-                    if ch >= 3:
-                        luma = (
-                            299 * px[:, :, 0] + 587 * px[:, :, 1] + 114 * px[:, :, 2]
-                        ) // 1000
-                    else:
-                        luma = px[:, :, 0]
-                    ppm = int(luma.sum() * 1_000_000 // (255 * h * w))
-                    rows.append((aid, w, h, ch, ppm, None))
-                except (NotImplementedError, ValueError, IndexError) as exc:
-                    rows.append((aid, None, None, None, None, str(exc)[:120]))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGE_STATS_SCHEMA.fields]
-            )
-
-    return (
-        assets.where(F.col("kind") == "image")
-        .select("asset_id", "payload")
-        .mapInPandas(batch_fn, IMAGE_STATS_SCHEMA)
-    )
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("asset_id", StringType()),
-        StructField("height", IntegerType()),
-        StructField("width", IntegerType()),
-        StructField("pixels", BinaryType()),
-        StructField("err", StringType()),
-    ]
-)
-
-
-def resize_images(assets: DataFrame, out_h: int = 32, out_w: int = 32) -> DataFrame:
-    """Decode (PNG/BMP) + nearest-neighbor resize to a fixed grid — the
-    normalize-before-embed step of a multimodal training pipeline. Output
-    pixels are a raw RGB byte buffer (gray replicated, alpha dropped) of
-    exactly out_h*out_w*3 bytes; undecodable rows carry ``err``."""
-    import numpy as np
-
-    def batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    img = decode_pixels(bytes(payload))
-                    h, w, ch = img.shape
-                    yi = (np.arange(out_h) * h) // out_h
-                    xi = (np.arange(out_w) * w) // out_w
-                    small = img[yi][:, xi]
-                    if ch == 1:
-                        small = np.repeat(small, 3, axis=2)
-                    elif ch == 2:  # gray+alpha: replicate gray, drop alpha
-                        small = np.repeat(small[:, :, :1], 3, axis=2)
-                    elif ch == 4:
-                        small = small[:, :, :3]
-                    rows.append(
-                        (aid, out_h, out_w, small.astype(np.uint8).tobytes(), None)
-                    )
-                except (NotImplementedError, ValueError, IndexError) as exc:
-                    rows.append((aid, None, None, None, str(exc)[:120]))
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZED_SCHEMA.fields])
-
-    return (
-        assets.where(F.col("kind") == "image")
-        .select("asset_id", "payload")
-        .mapInPandas(batch_fn, RESIZED_SCHEMA)
-    )
-
-
-def sample_frames(assets: DataFrame, every_n_bytes: int = 32, max_frames: int = 4) -> DataFrame:
-    """Frame-sampling stage for video payloads: emits one row per sampled
-    'frame' (here: a byte stride; a real impl strides by keyframe)."""
-
-    def batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                data = bytes(payload)
-                for i in range(min(max_frames, max(1, len(data) // every_n_bytes))):
-                    chunk = data[i * every_n_bytes : (i + 1) * every_n_bytes]
-                    rows.append((aid, i, hashlib.md5(chunk).hexdigest()))
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SAMPLE_SCHEMA.fields])
-
-    return (
-        assets.where(F.col("kind") == "video")
-        .select("asset_id", "payload")
-        .mapInPandas(batch_fn, FRAME_SAMPLE_SCHEMA)
-    )
-
-
-PROBE_SCHEMA = StructType(
-    [
-        StructField("asset_id", StringType()),
-        StructField("format", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
-
-
-def probe_dimensions(data: bytes):
-    """REAL container-format header parsing — (format, width, height) for
-    PNG / JPEG / GIF / BMP from the raw bytes, straight off the public
-    format specs (PNG IHDR big-endian, JPEG SOFn marker walk, GIF logical
-    screen little-endian, BMP BITMAPINFOHEADER little-endian). No codec
-    library involved: dimensions live in the container header, so unlike
-    pixel decode (the documented NotImplementedError boundary) this stage
-    is fully real in this container. Unknown/truncated → (None, None,
-    None)."""
-    if len(data) >= 24 and data[:8] == b"\x89PNG\r\n\x1a\n" and data[12:16] == b"IHDR":
-        return (
-            "png",
-            int.from_bytes(data[16:20], "big"),
-            int.from_bytes(data[20:24], "big"),
-        )
-    if data[:3] == b"\xff\xd8\xff":
-        i = 2
-        while i + 9 <= len(data):
-            if data[i] != 0xFF:
-                i += 1
-                continue
-            marker = data[i + 1]
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                i += 2  # standalone markers have no length field
-                continue
-            seg_len = int.from_bytes(data[i + 2 : i + 4], "big")
-            # SOF0..SOF15 except DHT(C4)/JPG(C8)/DAC(CC): height@+5, width@+7
-            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                return (
-                    "jpeg",
-                    int.from_bytes(data[i + 7 : i + 9], "big"),
-                    int.from_bytes(data[i + 5 : i + 7], "big"),
-                )
-            i += 2 + seg_len
-        return ("jpeg", None, None)  # valid SOI but no SOF found (truncated)
-    if len(data) >= 10 and data[:6] in (b"GIF87a", b"GIF89a"):
-        return (
-            "gif",
-            int.from_bytes(data[6:8], "little"),
-            int.from_bytes(data[8:10], "little"),
-        )
-    if len(data) >= 26 and data[:2] == b"BM":
-        return (
-            "bmp",
-            int.from_bytes(data[18:22], "little", signed=True),
-            # height may be negative (top-down rows)
-            abs(int.from_bytes(data[22:26], "little", signed=True)),
-        )
-    return (None, None, None)
-
-
-def probe_image_metadata(assets: DataFrame) -> DataFrame:
-    """Header-probe stage: (asset_id, format, width, height, n_bytes) for
-    every asset, real format sniffing over Arrow batches. The standard
-    pre-filter of an image pipeline (drop tiny/huge/unknown assets) runs on
-    this output WITHOUT ever invoking a pixel codec."""
-
-    def batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                data = bytes(payload)
-                fmt, w, h = probe_dimensions(data)
-                rows.append((aid, fmt, w, h, len(data)))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PROBE_SCHEMA.fields]
-            )
-
-    return assets.select("asset_id", "payload").mapInPandas(batch_fn, PROBE_SCHEMA)
 
 
 def _gif_count_frames(data: bytes) -> int:

@@ -116,32 +116,6 @@ def parse_sitemaps(files: DataFrame, path_col: str = "path",
     )
 
 
-def sitemap_url_candidates(sitemaps: DataFrame,
-                           robots_rules: DataFrame | None = None) -> DataFrame:
-    """Crawl-seed view: conformant <url> entries canonicalized
-    (``functions.text.canonical_url``) and — when a compiled robots rules
-    relation (``sources/robots.robots_rules``) is given — gated through
-    the RFC 9309 filter. Returns (url, sitemap_path, lastmod,
-    priority_ppm); feed to ``sources/frontier`` alongside organic
-    outlinks."""
-    from kausaldb_spark.functions import text as tx
-
-    urls = (
-        sitemaps.where(F.col("err").isNull() & (F.col("kind") == "url"))
-        .select(
-            tx.canonical_url(F.col("loc")).alias("url"),
-            "sitemap_path", "lastmod", "priority_ppm",
-        )
-    )
-    if robots_rules is not None:
-        from kausaldb_spark.sources import robots as rb
-
-        urls = rb.filter_urls_by_robots(urls, robots_rules).drop(
-            "robots_allowed"
-        )
-    return urls
-
-
 # --- deterministic fixture (the sitemap_parse oracle) ------------------------
 # Eight file classes built in PURE CODEGEN off the documents table; the
 # DuckDB twin predicts every entry from doc_id closed forms, while the
@@ -246,8 +220,8 @@ def recrawl_priority(entries: DataFrame, fetch_log: DataFrame,
                      ) -> DataFrame:
     """Refresh scheduling for an incremental crawl: score every known URL
     by how overdue it is. ``entries`` is the sitemap inventory
-    (url, lastmod, changefreq, priority_ppm — e.g. from
-    :func:`sitemap_url_candidates`); ``fetch_log`` is (url, last_fetch)
+    (url, lastmod, changefreq, priority_ppm — e.g. the conformant
+    ``<url>`` rows of :func:`parse_sitemaps`); ``fetch_log`` is (url, last_fetch)
     history. All arithmetic is exact integers (house rule), so the
     schedule is bit-identical across engines:
 

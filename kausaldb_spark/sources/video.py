@@ -7,11 +7,9 @@ Matroska/WebM (EBML vint-length header walk to the DocType).
 Completes the image/audio/video triple at the layer a 100 TB curation run
 actually needs first: classify, size and duration-gate the corpus WITHOUT
 invoking a single codec. Frame decode for real video codecs (H.264 etc.)
-requires hardware/codec libraries this environment does not have and
-stays behind an explicit NotImplementedError (`decode_video_frames`),
-per the prompt's stub-the-codec / make-the-plumbing-real contract; the
-container STRUCTURE parsing here is fully real and pinned against
-independent test-side builders.
+needs codec libraries and is out of scope: this module exposes no frame
+decoder. The container STRUCTURE parsing here is fully real and pinned
+against independent test-side builders.
 
 Layering mirrors the audio/image stacks:
 - ``probe_video_format`` — (format, mode, width, height, duration_ms,
@@ -202,16 +200,6 @@ def probe_video_format(data: bytes):
         )
         return (fmt, "malformed", None, None, None, None, None)
     return ("unknown", None, None, None, None, None, None)
-
-
-def decode_video_frames(data: bytes):
-    """Frame decode for compressed video codecs needs codec libraries this
-    environment does not ship — the documented boundary (the prompt's
-    stub-the-decode contract). Container parsing above is real."""
-    raise NotImplementedError(
-        "video frame decode requires codec libraries — container probing "
-        "(probe_video_format) is the implemented surface"
-    )
 
 
 VIDEO_PROBE_SCHEMA = (

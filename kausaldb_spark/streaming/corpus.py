@@ -2,18 +2,17 @@
 
 A production pipeline does not re-curate the whole corpus when the crawler
 drops a new batch of JSONL files — it streams them through the stateless
-half of the curation funnel (normalize → quality/lang/compressibility gate →
-within-horizon exact dedup) and appends survivors to the curated store.
-Structured Streaming gives the machinery: file-source discovery of new
-files, checkpointed exactly-once micro-batches, watermark-bounded dedup
-state.
+half of the curation funnel (normalize → quality/lang gate), screens near
+duplicates against a persisted MinHash index, and appends survivors to the
+curated store. Structured Streaming gives the machinery: file-source
+discovery of new files and checkpointed exactly-once micro-batches.
 
 What CAN stream (this module): every per-document stage — normalization,
-quality metrics, language id, compression ratio, content-hash dedup within
-the watermark horizon. What CANNOT: corpus-global stages (MinHash
-clustering, decontamination against a growing index, mixture solving) —
-those run as periodic batch compaction over the streamed-in store, exactly
-the reference's incremental-sync-then-rebuild split
+quality metrics, language id — plus near-duplicate screening against the
+index of everything already accepted. What CANNOT: corpus-global stages
+(MinHash clustering, decontamination against a growing index, mixture
+solving) — those run as periodic batch passes over the streamed-in store,
+exactly the reference's incremental-sync-then-rebuild split
 (``src/workspace/manager.zig`` sync loop; batch analogue:
 ``functions.curation.curate_and_write``).
 """
@@ -75,26 +74,6 @@ def curate_stream(stream: DataFrame, min_ratio_ppm: int = 50_000) -> DataFrame:
     ).drop("_q")
 
 
-def dedup_documents_stream(
-    stream: DataFrame, watermark: str = "24 hours", ts_col: str = "_ingest_ts"
-) -> DataFrame:
-    """Content-hash exactly-once dedup within the watermark horizon: a
-    re-crawled page arriving twice in a day is dropped on the second
-    arrival; state is evicted past the horizon (bounded, unlike a plain
-    dropDuplicates on a stream). Cross-horizon duplicates are the batch
-    compaction's job (exact dedup is growth-stable on content hash, so the
-    periodic pass converges). The event-time column is the processing-time
-    stamp of arrival — document streams carry no event time of their own."""
-    stamped = stream.withColumn(ts_col, F.current_timestamp()).withColumn(
-        "_content_hash", F.md5("text")
-    )
-    return (
-        stamped.withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["_content_hash"])
-        .drop(ts_col)
-    )
-
-
 def curated_append(
     stream: DataFrame, out_dir: str, checkpoint_dir: str
 ):
@@ -122,7 +101,7 @@ def curated_append(
 
 def curated_append_with_near_dup(
     stream: DataFrame, out_dir: str, checkpoint_dir: str, index_dir: str,
-    num: int = 7, den: int = 10, base_dir: str | None = None,
+    num: int = 7, den: int = 10,
 ):
     """Streaming ingestion with NEAR-duplicate screening: each micro-batch
     is deduped within itself (MinHash pairs -> connected components, the
@@ -140,16 +119,11 @@ def curated_append_with_near_dup(
     landed before the retry) — the decision is append-monotone: a replay
     can only drop more duplicates, never admit one, and the partition
     rewrite keeps store and index consistent with the final decision.
-
-    The index lands ``_batch_id``-partitioned for idempotency; a periodic
-    batch compaction should rewrite it partitioned by ``band`` to restore
-    bucket-join pruning — the same stream-then-compact split this module's
-    header describes for every corpus-global stage."""
+    The index lands ``_batch_id``-partitioned for that idempotency."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         near_dup_write_batch(
-            batch_df, batch_id, out_dir, index_dir, num=num, den=den,
-            base_dir=base_dir,
+            batch_df, batch_id, out_dir, index_dir, num=num, den=den
         )
 
     return (
@@ -161,14 +135,12 @@ def curated_append_with_near_dup(
 
 def near_dup_write_batch(
     batch_df: DataFrame, batch_id: int, out_dir: str, index_dir: str,
-    num: int = 7, den: int = 10, base_dir: str | None = None,
+    num: int = 7, den: int = 10,
 ) -> None:
     """One micro-batch of :func:`curated_append_with_near_dup`, exposed at
     module level so the crash-window replay (a foreachBatch retry after a
     kill between the store write and the index write) is directly
     testable — the test calls this twice with the same ``batch_id``."""
-    import os
-
     from kausaldb_spark.functions import dedup as dd
 
     spark = batch_df.sparkSession
@@ -191,11 +163,8 @@ def near_dup_write_batch(
         # whole batch. Excluding _batch_id == batch_id makes the replay a
         # genuine recompute, and the partition rewrite below restores
         # store/index consistency even if the first attempt crashed
-        # between the two writes. The index itself is the BASE + DELTA
-        # union (see compact_minhash_index).
-        index = read_minhash_index(
-            spark, index_dir, base_dir=base_dir, exclude_batch_id=batch_id
-        )
+        # between the two writes.
+        index = read_minhash_index(spark, index_dir, exclude_batch_id=batch_id)
         if index is not None:
             corpus_docs = (
                 spark.read.parquet(out_dir)
@@ -228,90 +197,21 @@ def near_dup_write_batch(
             survivors.unpersist()
 
 
-# ---------------------------------------------------------------------------
-# stream-then-compact: the periodic batch pass over the streamed-in index
-# (the split this module's header describes — streaming appends land
-# _batch_id-partitioned for replay idempotency; compaction folds them into
-# a band-partitioned BASE whose layout restores bucket-join pruning)
-# ---------------------------------------------------------------------------
-
-
 def read_minhash_index(
     spark: SparkSession,
     index_dir: str,
-    base_dir: str | None = None,
     exclude_batch_id: int | None = None,
 ) -> DataFrame | None:
-    """The dedup index as one relation: compacted BASE (band-partitioned)
-    unioned with the streamed DELTA (_batch_id-partitioned). Returns None
-    when neither exists yet (first batch of a fresh pipeline).
-    ``exclude_batch_id`` implements the foreachBatch replay-safety rule:
-    a retried batch must not see its own crashed-attempt partition."""
+    """The streamed dedup index (_batch_id-partitioned) as one relation.
+    Returns None when it does not exist yet (first batch of a fresh
+    pipeline). ``exclude_batch_id`` implements the foreachBatch
+    replay-safety rule: a retried batch must not see its own
+    crashed-attempt partition."""
     import os
 
-    cols = ["doc_id", "band", "bucket", "sig_v"]
-    parts = []
-    if base_dir and os.path.isdir(base_dir):
-        parts.append(spark.read.parquet(base_dir).select(*cols))
-    if os.path.isdir(index_dir):
-        d = spark.read.parquet(index_dir)
-        if exclude_batch_id is not None and "_batch_id" in d.columns:
-            d = d.where(F.col("_batch_id") != F.lit(exclude_batch_id))
-        parts.append(d.select(*cols))
-    if not parts:
+    if not os.path.isdir(index_dir):
         return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def compact_minhash_index(
-    spark: SparkSession, index_dir: str, base_dir: str
-) -> int:
-    """Fold the streamed delta index (and any previous base) into a fresh
-    band-partitioned base — the compaction half of stream-then-compact.
-    The streamed layout is partitioned by ``_batch_id`` (what dynamic
-    partition overwrite needs for exactly-once replays) which defeats the
-    band-bucket join pruning the batch dedup path relies on; the base
-    restores it. Refuses a mixed-``sig_v`` index loudly (folding two
-    signature schemes would silently miss every cross-scheme duplicate).
-
-    Local-FS swap discipline: write to ``<base>.compacting``, rename over
-    the old base, then clear the delta dir. On an object store, write a
-    new versioned prefix and flip a manifest pointer instead — rename is
-    not atomic there (same caveat as ``sinks.write_sharded``).
-
-    Returns the compacted row count."""
-    import os
-    import shutil
-
-    idx = read_minhash_index(spark, index_dir, base_dir)
-    if idx is None:
-        raise FileNotFoundError(
-            f"no index to compact at {index_dir!r} / {base_dir!r}"
-        )
-    versions = [r[0] for r in idx.select("sig_v").distinct().collect()]
-    if len(versions) != 1:
-        raise ValueError(
-            f"mixed sig_v in index: {sorted(versions)} — rebuild with one "
-            "signature scheme before compacting"
-        )
-    tmp = base_dir.rstrip("/") + ".compacting"
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
-        idx.repartition("band", "bucket")
-        .write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(tmp)
-    )
-    n = spark.read.parquet(tmp).count()
-    old = base_dir.rstrip("/") + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(base_dir):
-        os.rename(base_dir, old)
-    os.rename(tmp, base_dir)
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(index_dir):
-        shutil.rmtree(index_dir)
-    return n
+    d = spark.read.parquet(index_dir)
+    if exclude_batch_id is not None and "_batch_id" in d.columns:
+        d = d.where(F.col("_batch_id") != F.lit(exclude_batch_id))
+    return d.select("doc_id", "band", "bucket", "sig_v")

@@ -210,26 +210,6 @@ def sessionize_stream(stream: DataFrame, watermark: str = "1 hour") -> DataFrame
     )
 
 
-def dedup_stream(
-    stream: DataFrame, keys: list[str] | None = None, watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming exactly-once dedup for at-least-once delivery: the first
-    arrival of each key passes, replays within the watermark horizon are
-    dropped, and state is evicted once the watermark passes (bounded state —
-    the property a plain ``dropDuplicates`` on a stream lacks). Built on
-    ``dropDuplicatesWithinWatermark`` so the dedup state lives in the
-    streaming state store, keyed and partitioned by the dedup key.
-
-    Default key is ``event_id`` — the ingestion-side idempotency key; a
-    pipeline would use the content hash for document streams."""
-    with_ts = stream.withColumn("ts", F.timestamp_micros(F.col("us")))
-    return (
-        with_ts.withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(keys or ["event_id"])
-        .drop("ts")
-    )
-
-
 def incremental_ingest(
     stream: DataFrame, out_dir: str, checkpoint_dir: str
 ):

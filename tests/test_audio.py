@@ -183,9 +183,3 @@ def test_audio_stats_stage_and_row_isolation(spark):
             assert r["peak16"] == a and r["sum_sq16"] == n * a * a, (d, r)
         if not ok and k != 9:
             assert r["sample_rate"] is not None  # header fields stay real
-    cov = {
-        (r["format"], r["mode"], r["decodable"]): r["n_assets"]
-        for r in au.audio_coverage(assets).collect()
-    }
-    assert sum(cov.values()) == 31
-    assert cov[("wav", "pcm16", True)] == 6  # classes 0 and 1, 3 docs each

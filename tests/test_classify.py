@@ -164,13 +164,15 @@ def test_nb_zero_token_doc_scores_prior_only(spark):
 
 
 def test_nb_quality_source_bootstrap(spark):
-    # weak source labels: the nb_quality wrapper trains on membership in
-    # good_sources and emits one row per input id
+    # weak source labels: train on membership in the good sources, score
+    # the whole corpus; one row per input id
     rows = [
         (i, "fluent prose reference " * 3, "wiki") for i in range(8)
     ] + [(100 + i, "click casino free " * 3, "crawl") for i in range(8)]
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = {r["doc_id"]: r for r in cls.nb_quality(docs, ("wiki",)).collect()}
+    labeled = docs.withColumn("good", (docs.source == "wiki").cast("int"))
+    counts, priors = cls.nb_train(labeled, "good")
+    out = {r["doc_id"]: r for r in cls.nb_score(counts, priors, docs).collect()}
     assert len(out) == 16
     assert all(out[i]["pred_good"] == 1 for i in range(8))
     assert all(out[100 + i]["pred_good"] == 0 for i in range(8))

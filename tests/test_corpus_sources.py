@@ -26,7 +26,7 @@ def test_parquet_reader_conforms(docs):
 def test_jsonl_roundtrip(spark, docs):
     d = tempfile.mkdtemp(prefix="kdb_jsonl_")
     try:
-        corpus.write_jsonl_documents(docs, d, n_files=2)
+        docs.coalesce(2).write.mode("overwrite").json(d)
         files = [f for f in os.listdir(d) if f.endswith(".json")]
         assert 1 <= len(files) <= 2
         back = corpus.read_jsonl_documents(

@@ -3,6 +3,8 @@ header-row and short-row classes), RFC 4180 quoting through Univocity,
 file-based reads with shard-concatenation headers, and the pure-codegen
 plan contract."""
 
+from pyspark.sql import functions as F
+
 from kausaldb_spark.sources import csvl as cv
 
 
@@ -61,7 +63,8 @@ def test_read_csv_documents_from_files(spark, tmp_path):
     (d / "b.csv").write_text(
         "doc_id,text,lang,source,n_chars\n3,gamma,fr,b,5\n"
     )
-    rows = cv.read_csv_documents(spark, str(d)).collect()
+    lines = spark.read.text(str(d)).select(F.col("value").alias("line"))
+    rows = cv.parse_csv_lines(lines).collect()
     by_id = {r["doc_id"]: r.asDict() for r in rows if r["doc_id"] is not None}
     assert by_id[1]["text"] == "alpha" and by_id[3]["lang"] == "fr"
     assert sum(1 for r in rows if r["err"] == "header-row") == 2

@@ -12,6 +12,9 @@ from kausaldb_spark.operators import traversal as tv
 from kausaldb_spark.sources import ingest
 
 REPO_PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "kausaldb_spark")
+# hand-written Zig tree laid out like the reference's src/ (query layer,
+# zig_parser walker, shared types); the exact counts below are its decls
+ZIG_FIXTURE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "zig_src")
 
 
 @pytest.fixture(scope="module")
@@ -117,24 +120,47 @@ def test_ingest_own_package(spark):
     assert "bfs" in caller_names  # bfs() calls orient()
 
 
-def test_zig_ingest_of_reference_query_dir(spark, tmp_path_factory):
-    """The engine must ingest the reference's own Zig sources
-    (zig_parser.zig taxonomy) and answer `show --relation callers` on a
-    known function with non-empty results."""
+@pytest.fixture(scope="module")
+def zig_engine(spark, tmp_path_factory):
+    """(engine, link info) over the fixture's query/ directory."""
     from kausaldb_spark.engine import KausalEngine
 
-    store = str(tmp_path_factory.mktemp("store_zig"))
-    eng = KausalEngine(spark, store)
-    info = eng.link_codebase("/root/reference/src/query", "refquery")
-    assert info["blocks"] > 100 and info["edges"] > 100
+    eng = KausalEngine(spark, str(tmp_path_factory.mktemp("store_zig")))
+    return eng, eng.link_codebase(os.path.join(ZIG_FIXTURE, "query"), "refquery")
 
-    vis = eng.store.visible()
+
+def test_zig_ingest_of_query_fixture_dir(zig_engine):
+    """The engine must ingest a Zig query layer (zig_parser.zig taxonomy)
+    and answer `show --relation callers` on a known function with exactly
+    its callers."""
+    eng, info = zig_engine
+    # 23 units over engine/filtering/traversal.zig; 8 resolved edges: four
+    # method_of, QueryEngine.show_callers/show_callees -> traverse_incoming/
+    # traverse_outgoing (calls_method), traverse_* -> execute_traversal
+    # (calls). Import self-edges and calls into std do not resolve.
+    assert (info["blocks"], info["edges"]) == (23, 8), info
+
+    vis = eng.store.visible().where(F.col("codebase") == "refquery")
     types = {r["unit_type"] for r in vis.select("unit_type").distinct().collect()}
-    assert {"function", "type", "const", "import", "test"} <= types
+    assert types == {"function", "type", "const", "import", "test"}
 
     callers = eng.find_callers("refquery", "execute_traversal")
     names = {r["unit_id"].split(":")[-1] for r in callers.collect()}
-    assert {"traverse_outgoing", "traverse_incoming"} <= names, names
+    assert names == {"traverse_outgoing", "traverse_incoming"}, names
+
+
+def test_show_without_anchor_keeps_traverse_columns(zig_engine):
+    """`show` on an unknown target returns zero rows with the same columns
+    (and types) as a hit, so `--format text` prints one header either way."""
+    eng, _ = zig_engine
+    hit = eng.find_callers("refquery", "execute_traversal")
+    assert hit.columns == [
+        "id", "depth", "unit_type", "unit_id", "codebase", "source_uri", "content"
+    ]
+    for relation in (eng.find_callers, eng.find_callees, eng.find_references):
+        miss = relation("refquery", "no_such_unit")
+        assert miss.dtypes == hit.dtypes, relation.__name__
+        assert miss.collect() == []
 
 
 def test_zig_method_qualification_and_imports(spark, tmp_path_factory):
@@ -218,20 +244,6 @@ def test_discovery_git_ls_files(tmp_path_factory):
     files2 = ingest.list_files(root, config=ingest.IngestConfig(prefer_git=False))
     rels2 = [rel for _, rel in files2]
     assert "build/gen.py" in rels2
-
-
-def test_ingest_manifest_matches_directory(spark, fixture_tree):
-    """Manifest-table ingest (listing as a DataFrame, no driver file list)
-    must produce the identical block/edge sets as directory ingest."""
-    files = ingest.list_files(fixture_tree)
-    b1, e1 = ingest.ingest_directory(spark, fixture_tree, "fix")
-    manifest = spark.createDataFrame(files, "abs_path string, file_path string")
-    b2, e2 = ingest.ingest_manifest(spark, manifest, "fix")
-    cols = ["id", "sequence", "unit_id", "content"]
-    s1 = {tuple(r) for r in b1.select(cols).collect()}
-    s2 = {tuple(r) for r in b2.select(cols).collect()}
-    assert s1 == s2
-    assert {tuple(r) for r in e1.collect()} == {tuple(r) for r in e2.collect()}
 
 
 def test_zig_golden_cases_from_reference():
@@ -408,38 +420,54 @@ def test_zig_multiline_continuation_decls():
     assert names["LIMIT"] == "const"
 
 
-def test_zig_selfhost_reference_src(spark):
-    """Ingest the reference's whole src/ tree (read-only input data) and
-    spot-check per-file unit extraction: every .zig file yields units, no
-    file falls back to a whole-file 'document' blob, and known files carry
-    their known decls. This is the r6 'real Zig codebase' fidelity gate."""
+def test_zig_fixture_src_unit_extraction():
+    """Parse the whole Zig fixture tree and spot-check per-file unit
+    extraction: every .zig file yields units, no file falls back to a
+    whole-file 'document' blob, and known files carry exactly their known
+    decls: container methods, fn-local consts, imports and tests."""
     import glob as _glob
 
     from kausaldb_spark.sources.ingest import _parse_zig
 
-    files = sorted(_glob.glob("/root/reference/src/**/*.zig", recursive=True))
-    assert len(files) > 50
+    files = sorted(_glob.glob(os.path.join(ZIG_FIXTURE, "**", "*.zig"), recursive=True))
     per_file = {}
     for p in files:
-        with open(p, encoding="utf-8", errors="replace") as f:
+        with open(p, encoding="utf-8") as f:
             src = f.read()
-        rel = p.removeprefix("/root/reference/src/")
-        units, edges = _parse_zig(rel, src)
+        rel = os.path.relpath(p, ZIG_FIXTURE)
+        units, _edges = _parse_zig(rel, src)
         per_file[rel] = units
         # no parse bail-outs: a non-empty .zig source never degrades to the
         # single whole-file document fallback
-        if src.strip():
-            assert not (len(units) == 1 and units[0][1] == "document"), rel
+        assert not (len(units) == 1 and units[0][1] == "document"), rel
+    assert {rel: len(u) for rel, u in per_file.items()} == {
+        "core/types.zig": 3,
+        "ingestion/parsers/zig_parser.zig": 14,
+        "query/engine.zig": 8,
+        "query/filtering.zig": 4,
+        "query/traversal.zig": 11,
+    }
 
-    zp = per_file["ingestion/parsers/zig_parser.zig"]
-    zp_names = {u[2]: u[1] for u in zp}
-    assert zp_names.get("Walker") == "type"
-    assert any(n.startswith("Walker.walk") for n in zp_names)
-    assert zp_names.get("std") == "import"
-    # fn-local consts from the real tree are present and fn-qualified
-    assert any("." in n and t == "const" for n, t in zp_names.items()), "no locals"
-    # unit volume sanity: the walker file is ~1000 lines of dense decls
-    assert len(zp) > 40, len(zp)
+    zp_names = {u[2]: u[1] for u in per_file["ingestion/parsers/zig_parser.zig"]}
+    assert zp_names == {
+        "std": "import",
+        "UnitKind": "type",
+        "Unit": "type",
+        "Walker": "type",
+        "Walker.init": "function",
+        "Walker.walk": "function",
+        "Walker.walk.first": "const",
+        "Walker.walk_decl": "function",
+        "Walker.walk_decl.kind": "const",
+        "parse_source": "function",
+        "parse_source.initial_capacity": "const",
+        "parse_source.units": "var",
+        "parse_source.walker": "var",
+        "walker_emits_one_unit": "test",
+    }
+    tr_names = {u[2]: u[1] for u in per_file["query/traversal.zig"]}
+    assert tr_names["execute_traversal.limit"] == "const"
+    assert tr_names["TraversalResult.count"] == "function"
 
 
 def test_zig_comptime_blocks_are_not_walked():

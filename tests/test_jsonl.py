@@ -4,6 +4,8 @@ pure-codegen plan contract (no Python anywhere in the parse path)."""
 
 import json
 
+from pyspark.sql import functions as F
+
 from kausaldb_spark.sources import jsonl as jl
 
 
@@ -58,8 +60,8 @@ def test_read_jsonl_documents_from_files(spark, tmp_path):
     (d / "b.jsonl").write_text(
         '{"doc_id": 3, "text": "beta", "lang": "de", "source": "b"}\n'
     )
-    rows = {r["doc_id"]: r.asDict()
-            for r in jl.read_jsonl_documents(spark, str(d)).collect()}
+    lines = spark.read.text(str(d)).select(F.col("value").alias("line"))
+    rows = {r["doc_id"]: r.asDict() for r in jl.parse_jsonl(lines).collect()}
     assert rows[1]["err"] is None and rows[1]["text"] == "alpha"
     assert rows[3]["err"] is None and rows[3]["n_chars"] == 4  # repaired
     assert sum(1 for r in rows.values() if r["err"] == "malformed-json") == 1

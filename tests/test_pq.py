@@ -1,6 +1,6 @@
 """Product-quantization ANN pins (functions/similarity.py PQ section).
 
-PQ's training is k-means (not SQL-expressible), so like IVF the driver gate
+PQ's training is k-means (not SQL-expressible), so the driver gate
 is rows-only; these tests carry the correctness weight: ADC arithmetic is
 pinned EXACTLY against hand-built codebooks and a brute-force integer
 model, and the recall invariants against the module's own exact leg.
@@ -126,27 +126,21 @@ def test_pq_train_determinism_and_dim_guard(spark):
         sm.pq_train(df, m=5)
 
 
-def test_pq_index_roundtrip_and_version_refusal(spark, tmp_path):
+def test_pq_index_roundtrip_and_version_refusal(spark):
     import json
-    import os
 
     df = _clustered(spark, n=40)
-    path = str(tmp_path / "pq_idx")
-    meta = sm.pq_index(df, path, m=4, n_codes=4)
-    assert meta["pq_v"] == sm.PQ_VERSION
-    got = sm.pq_topk_vs_index(spark, path, df, [0, 1], k=3).collect()
+    book = sm.pq_train(df, m=4, n_codes=4)
+    assert book["pq_v"] == sm.PQ_VERSION
+    # a codebook persisted as JSON and passed back reproduces the fit
+    stored = json.loads(json.dumps(book))
+    got = sm.pq_topk(df, [0, 1], k=3, book=stored).collect()
     fresh = sm.pq_topk(df, [0, 1], k=3, m=4, n_codes=4).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    assert sorted([tuple(r) for r in got], key=lambda t: (t[0], t[2])) == sorted(
-        [tuple(r) for r in fresh], key=lambda t: (t[0], t[2])
-    )
+    assert sorted(map(tuple, got)) == sorted(map(tuple, fresh))
     # tamper the version stamp -> loud refusal, not wrong distances
-    mp = os.path.join(path, "_pq_meta.json")
-    m = json.load(open(mp))
-    m["pq_v"] = sm.PQ_VERSION + 1
-    json.dump(m, open(mp, "w"))
+    stored["pq_v"] = sm.PQ_VERSION + 1
     with pytest.raises(ValueError, match="version"):
-        sm.pq_topk_vs_index(spark, path, df, [0], k=3)
+        sm.pq_topk(df, [0], k=3, book=stored)
 
 
 def test_pq_compression_shape(spark):

@@ -135,13 +135,6 @@ def test_weakly_connected_components(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "z": "x"}
 
 
-def test_scc_parity_alias(spark):
-    # reference SCC is a stub that falls through to DFS reachability
-    e = _edges(spark, [("a", "b"), ("b", "a"), ("b", "c")])
-    got = {r["id"]: r["depth"] for r in tv.scc(e, ["a"], max_depth=10).collect()}
-    assert got == {"a": 0, "b": 1, "c": 2}
-
-
 def test_deep_chain_500(spark):
     """Scalability scenario (query.zig:527): 500-node chain, depth >= 20."""
     chain = [(f"d{i:04d}", f"d{i+1:04d}") for i in range(499)]
@@ -259,69 +252,6 @@ def _tarjan(edges_list):
         if v not in index_of:
             strongconnect(v)
     return comps
-
-
-def test_scc_simple_cycles(spark):
-    """Two 2-cycles bridged by a one-way edge + a tail: four SCCs."""
-    pairs = [("a", "b"), ("b", "a"), ("b", "c"), ("c", "d"), ("d", "c"), ("d", "e")]
-    e = _edges(spark, pairs)
-    got = {r["id"]: r["component"] for r in tv.strongly_connected_components(e).collect()}
-    assert got == _tarjan(pairs)
-    assert got["a"] == got["b"] == "a"
-    assert got["c"] == got["d"] == "c"
-    assert got["e"] == "e"
-
-
-def test_scc_matches_tarjan_on_pseudorandom_graph(spark):
-    """Deterministic pseudo-random digraph (md5-derived edges): the
-    distributed FW-BW coloring must equal driver Tarjan exactly."""
-    import hashlib
-
-    n = 40
-    pairs = []
-    for i in range(n * 3):
-        h = hashlib.md5(f"scc{i}".encode()).hexdigest()
-        s, d = int(h[:4], 16) % n, int(h[4:8], 16) % n
-        if s != d:
-            pairs.append((f"n{s:02d}", f"n{d:02d}"))
-    pairs = sorted(set(pairs))
-    e = _edges(spark, pairs)
-    got = {r["id"]: r["component"] for r in tv.strongly_connected_components(e).collect()}
-    want = _tarjan(pairs)
-    assert got == want
-    # sanity: the graph actually has at least one multi-node SCC
-    from collections import Counter
-
-    assert max(Counter(want.values()).values()) > 1
-
-
-def test_scc_path_graph_beyond_old_round_cap(spark):
-    """60-node path: every node its own SCC. The old max_rounds=20 silently
-    dropped 40 nodes (one peel per round); the trim phase now resolves the
-    whole path without any coloring round, and caps raise instead of
-    truncating (VERDICT r4 §Wrong #4)."""
-    pairs = [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(59)]
-    e = _edges(spark, pairs)
-    got = {r["id"]: r["component"] for r in tv.strongly_connected_components(e).collect()}
-    assert got == _tarjan(pairs)
-    assert len(got) == 60 and all(k == v for k, v in got.items())
-
-
-def test_scc_long_cycle_beyond_old_iteration_cap(spark):
-    """55-node directed cycle: one SCC whose forward coloring needs ~55
-    propagation steps — past the old max_iterations=50, which would have
-    split the component. Also: an exhausted explicit cap must raise, never
-    return wrong components."""
-    import pytest as _pytest
-
-    n = 55
-    pairs = [(f"c{i:02d}", f"c{(i + 1) % n:02d}") for i in range(n)]
-    e = _edges(spark, pairs)
-    got = {r["id"]: r["component"] for r in tv.strongly_connected_components(e).collect()}
-    assert got == _tarjan(pairs)
-    assert set(got.values()) == {"c00"} and len(got) == n
-    with _pytest.raises(RuntimeError, match="not converged"):
-        tv.strongly_connected_components(e, max_iterations=5)
 
 
 def test_wcc_exhausted_cap_raises(spark):

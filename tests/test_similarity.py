@@ -1,4 +1,4 @@
-"""Similarity search: exact brute-force invariants, LSH/IVF recall against
+"""Similarity search: exact brute-force invariants, LSH recall against
 the exact baseline, and the float-cosine helper."""
 
 import pytest
@@ -35,25 +35,6 @@ def test_dot_topk_exact_invariants(emb):
         dots = [d for _, d, _ in lst]
         assert dots == sorted(dots, reverse=True)  # ranked by score
         assert all(n != q for _, _, n in lst)      # self excluded
-
-
-def test_ivf_recall_vs_exact(emb):
-    exact = _topk_map(sim.dot_topk(emb, QIDS, k=5))
-    approx = _topk_map(sim.ivf_topk(emb, QIDS, k=5, n_clusters=16, n_probe=8))
-    recalls = [
-        len(set(exact[q]) & set(approx.get(q, []))) / 5 for q in QIDS
-    ]
-    # probing half the centroids on random unit vectors: most true neighbors
-    # should be found (they concentrate in the query's nearby cells)
-    assert sum(recalls) / len(recalls) >= 0.5, recalls
-
-
-def test_ivf_full_probe_equals_exact(emb):
-    """Probing every centroid must recover the exact result — the IVF
-    index is lossless at n_probe == n_clusters."""
-    exact = _topk_map(sim.dot_topk(emb, QIDS, k=5))
-    full = _topk_map(sim.ivf_topk(emb, QIDS, k=5, n_clusters=8, n_probe=8))
-    assert exact == full
 
 
 def test_float_cosine_selfsim(spark, emb):
@@ -294,52 +275,6 @@ def test_semantic_dedup_sample_fit_matches_full_fit(spark):
     assert tiny == full
 
 
-def test_ivf_sample_fit_full_probe_still_exact(emb):
-    """With n_probe == n_clusters every partition is probed, so the result
-    equals the exact baseline NO MATTER what centroids the (sampled) fit
-    produced — the invariant that makes sample-fit safe to deploy."""
-    exact = sim.dot_topk(emb, [0, 1], k=5).collect()
-    ivf = sim.ivf_topk(
-        emb, [0, 1], k=5, n_clusters=4, n_probe=4, fit_sample_fraction=0.3
-    ).collect()
-    key = lambda rs: {(r["query_id"], r["neighbor_id"], r["rank"]) for r in rs}  # noqa: E731
-    assert key(ivf) == key(exact)
-
-
-def test_ivf_index_probe_prunes_partitions_and_full_probe_exact(spark, emb, tmp_path):
-    """Persisted IVF index: (a) probing reads ONLY the probed centroid
-    partitions — PartitionFilters appears in the scan plan with the IN
-    list; (b) with n_probe == n_clusters the result equals the exact
-    brute-force baseline (same invariant as the ad-hoc ivf_topk)."""
-    p = str(tmp_path / "ivf")
-    meta = sim.ivf_index(emb, p, n_clusters=4, seed=1)
-    assert meta["n_clusters"] == 4 and len(meta["centers"]) == 4
-
-    qs = [
-        (r["vec_id"], list(r["embedding"]))
-        for r in emb.where(emb.vec_id.isin([0, 1])).collect()
-    ]
-    # full probe == exact
-    exact = {
-        (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in sim.dot_topk(emb, [0, 1], k=5).collect()
-    }
-    full = {
-        (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in sim.ivf_topk_vs_index(spark, p, qs, k=5, n_probe=4).collect()
-    }
-    assert full == exact
-
-    # partial probe: the scan plan prunes on the centroid partition column
-    df = sim.ivf_topk_vs_index(spark, p, qs, k=5, n_probe=1)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "centroid" in plan
-    # and it still returns k ranked neighbors per query
-    got = df.collect()
-    assert {r["query_id"] for r in got} == {0, 1}
-    assert all(1 <= r["rank"] <= 5 for r in got)
-
-
 def test_semantic_dedup_single_cluster_matches_brute_cosine_components(spark):
     """With n_clusters=1 the pair relation is exactly {cosine >= tau} over
     the whole corpus, so the reported groups must equal the connected
@@ -495,28 +430,6 @@ def test_lsh_recall_planted(spark, emb):
     }
     assert any(v["n_hit"] > 0 for v in wide.values())
     assert all(v["n_approx"] == 5 for v in wide.values())
-
-
-def test_ivf_recall_full_probe_is_exact_and_partial_probe_bounded(emb):
-    """Full probe (n_probe >= n_clusters) IS the exact scan -> recall_ppm
-    must be exactly 1e6 for every query; a 1-probe run obeys the metric's
-    invariants and can only do worse or equal."""
-    full = {
-        r["query_id"]: r.asDict()
-        for r in sim.ivf_recall(emb, QIDS, k=5, n_clusters=8, n_probe=8).collect()
-    }
-    assert set(full) == set(QIDS)
-    for v in full.values():
-        assert v["recall_ppm"] == 1_000_000 and v["n_hit"] == v["n_exact"] == 5
-    one = {
-        r["query_id"]: r.asDict()
-        for r in sim.ivf_recall(emb, QIDS, k=5, n_clusters=8, n_probe=1).collect()
-    }
-    for q, v in one.items():
-        assert 0 <= v["n_hit"] <= v["n_exact"] == 5
-        assert v["n_approx"] <= 5
-        assert v["recall_ppm"] == (v["n_hit"] * 1_000_000) // 5
-        assert v["recall_ppm"] <= full[q]["recall_ppm"]
 
 
 def test_semantic_dedup_rejects_non_integral_id(spark):

@@ -68,18 +68,19 @@ def test_roundtrip_preserves_rows_and_balance(spark, docs):
 
 
 def test_shard_order_matches_shard_and_shuffle(spark, docs):
-    """Within-shard read order == the shard_and_shuffle (shard, pos) order:
-    the sink and the order op agree on what 'training order' means. The
-    read result is NOT re-sorted here — the collected iteration order
-    itself must be correct (each shard contiguous and internally ordered),
-    which is exactly what a training loader consumes."""
+    """Each shard directory, read file by file in name order (the way a
+    training loader consumes ``shard=K/``), lists its rows in the
+    shard_and_shuffle (shard, pos) order: the sink and the order op agree
+    on what 'training order' means, and the written files carry it with
+    no re-sort at read time."""
+    import pyarrow.parquet as pq
+
     from kausaldb_spark.functions import text as tx
 
     p = _tmp()
     try:
-        # tiny maxRecordsPerFile forces every shard to span several files —
-        # the scan bin-packs files across shard dirs, the case a bare
-        # sortWithinPartitions over scan splits gets WRONG
+        # tiny maxRecordsPerFile forces every shard to span several files,
+        # so the order must hold across file boundaries too
         sinks.write_training_shards(
             docs, p, n_shards=4, seed=7, max_records_per_file=50
         )
@@ -92,25 +93,20 @@ def test_shard_order_matches_shard_and_shuffle(spark, docs):
         per_shard_want = {
             s: g["doc_id"].tolist() for s, g in want.groupby("shard")
         }
-        got = sinks.read_training_shards(spark, p).select("shard", "doc_id").collect()
-        # each shard's rows are contiguous in iteration order...
-        seen: list[int] = []
-        for r in got:
-            if not seen or seen[-1] != r["shard"]:
-                seen.append(r["shard"])
-        assert len(seen) == len(set(seen)), f"shard rows interleaved: {seen}"
-        # ...and internally in training order
         per_shard_got: dict[int, list[int]] = {}
-        for r in got:
-            per_shard_got.setdefault(r["shard"], []).append(r["doc_id"])
+        for d in sorted(os.listdir(p)):
+            if not d.startswith("shard="):
+                continue
+            files = sorted(
+                f for f in os.listdir(os.path.join(p, d)) if f.endswith(".parquet")
+            )
+            assert len(files) > 1, d
+            ids = per_shard_got.setdefault(int(d.split("=", 1)[1]), [])
+            for f in files:
+                ids += pq.read_table(
+                    os.path.join(p, d, f), columns=["doc_id"]
+                ).column("doc_id").to_pylist()
         assert per_shard_got == per_shard_want
-        # single-shard read prunes partitions and yields that shard's slice,
-        # already in order without any re-sort
-        s0 = sinks.read_training_shards(spark, p, shard=0).select(
-            "shard", "doc_id"
-        ).collect()
-        assert all(r["shard"] == 0 for r in s0)
-        assert [r["doc_id"] for r in s0] == per_shard_want[0]
     finally:
         shutil.rmtree(p, ignore_errors=True)
 

@@ -1,6 +1,6 @@
 """Sitemap source pins: protocol parse (urlset/sitemapindex), entity
-decode, prefixed namespaces, exact ppm priorities, per-file quarantine,
-and the robots-gated candidate view."""
+decode, prefixed namespaces, exact ppm priorities and per-file
+quarantine."""
 
 from pyspark.sql import functions as F
 
@@ -79,33 +79,6 @@ def test_priority_ppm_exact(spark):
     ])
     ppm = {r["loc"]: r["priority_ppm"] for r in got["p.xml"]}
     assert ppm == {"u1": 1_000_000, "u2": 123_456, "u3": None}
-
-
-def test_url_candidates_robots_gated(spark):
-    from kausaldb_spark.sources import robots as rb
-
-    files = spark.createDataFrame(
-        [("s.xml",
-          f"<urlset {_NS}>"
-          "<url><loc>https://h.com/private/x</loc></url>"
-          "<url><loc>https://h.com/pub/y#frag</loc>"
-          "<priority>0.7</priority></url>"
-          "<url><loc>https://open.com/z</loc></url></urlset>")],
-        "path string, content string",
-    )
-    parsed = sm.parse_sitemaps(files)
-    hosts = spark.createDataFrame(
-        [("h.com", "User-agent: *\nDisallow: /private/\n")],
-        "host string, content string",
-    )
-    rules = rb.robots_rules(hosts, "bot")
-    got = {r["url"]: r.asDict()
-           for r in sm.sitemap_url_candidates(parsed, rules).collect()}
-    # denied path dropped; fragment stripped by canonicalization;
-    # no-robots host passes by the left-join-miss allowed default
-    assert "https://h.com/private/x" not in got
-    assert got["https://h.com/pub/y"]["priority_ppm"] == 700_000
-    assert "https://open.com/z" in got
 
 
 def test_parse_plan_stays_jvm_side(spark):

@@ -244,51 +244,6 @@ def test_sessionize_stream_late_before_open_session(spark, tmp_path):
     assert len(idxs) == len(set(idxs)), f"duplicate session_idx: {rows}"
 
 
-def test_dedup_stream_drops_replays(spark, tmp_path):
-    """At-least-once delivery: the same event replayed in a later micro-batch
-    (within the watermark) must come out exactly once; distinct events all
-    survive. Compares against batch dropDuplicates on the union."""
-    import glob
-    import shutil
-
-    sec = 1_000_000
-    B = 100_000 * sec
-    chunk0 = [(1, B, 7, "view", 1.0), (2, B + 60 * sec, 7, "view", 1.0)]
-    # chunk1 replays event 2 (same id, same payload) and adds two new events
-    chunk1 = [
-        (2, B + 60 * sec, 7, "view", 1.0),
-        (3, B + 120 * sec, 8, "purchase", 2.0),
-        (1, B, 7, "view", 1.0),  # replay of event 1 as well
-        (4, B + 180 * sec, 8, "view", 0.5),
-    ]
-    d = os.path.join(str(tmp_path), "dd_chunks")
-    os.makedirs(d)
-    schema = "event_id long, us long, user_id long, event_type string, value double"
-    for i, rows in enumerate((chunk0, chunk1)):
-        stage = os.path.join(str(tmp_path), f"dd_stage{i}")
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(stage)
-        shutil.copy(
-            glob.glob(os.path.join(stage, "part-*.parquet"))[0],
-            os.path.join(d, f"chunk_{i}.parquet"),
-        )
-
-    out = sev.dedup_stream(sev.stream_events(spark, d, files_per_trigger=1))
-    _run(
-        out.writeStream.format("memory").queryName("dd_t").outputMode("append"),
-        tmp_path, "dd",
-    )
-    got = sorted(
-        (r["event_id"], r["us"]) for r in spark.sql("select * from dd_t").collect()
-    )
-    want = sorted(
-        (r["event_id"], r["us"])
-        for r in spark.createDataFrame(chunk0 + chunk1, schema)
-        .dropDuplicates(["event_id"]).collect()
-    )
-    assert got == want, f"stream {got} != batch {want}"
-    assert len(got) == 4
-
-
 def test_rollup_true_kill_restart_matches_uninterrupted(spark, tmp_path_factory):
     """r8 verdict item 4 (rollup sink): hard-stop the windowed rollup mid
     replay and restart from the same checkpoint — the watermark/window

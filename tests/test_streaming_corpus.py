@@ -1,5 +1,5 @@
 """Streaming corpus ingestion: streamed curation gate == batch gate,
-exactly-once appends, within-horizon content dedup."""
+exactly-once appends, near-duplicate screening against the streamed index."""
 
 import json
 import os
@@ -68,38 +68,6 @@ def test_streamed_append_is_exactly_once_on_restart(spark, doc_chunks, tmp_path)
     stream2 = sc.curate_stream(sc.stream_documents(spark, src))
     _run(sc.curated_append(stream2, out, ck))
     assert spark.read.parquet(out).count() == n1
-
-
-def test_dedup_documents_stream_drops_recrawls(spark, tmp_path):
-    src = tmp_path / "incoming"
-    src.mkdir()
-    docs = [
-        {"doc_id": 1, "text": "alpha page", "lang": "en", "source": "crawl"},
-        {"doc_id": 2, "text": "beta page", "lang": "en", "source": "crawl"},
-    ]
-    with open(src / "a.jsonl", "w") as fh:
-        for d in docs:
-            fh.write(json.dumps(d) + "\n")
-    # re-crawl: same content, new doc ids, later file
-    with open(src / "b.jsonl", "w") as fh:
-        fh.write(json.dumps({"doc_id": 3, "text": "alpha page", "lang": "en",
-                             "source": "recrawl"}) + "\n")
-        fh.write(json.dumps({"doc_id": 4, "text": "gamma page", "lang": "en",
-                             "source": "crawl"}) + "\n")
-    # the file source orders arrivals by modification time — pin it, or
-    # same-mtime files make "which duplicate came first" nondeterministic
-    os.utime(src / "a.jsonl", (1_700_000_000, 1_700_000_000))
-    os.utime(src / "b.jsonl", (1_700_000_100, 1_700_000_100))
-    out = str(tmp_path / "deduped")
-    ck = str(tmp_path / "ck")
-    stream = sc.dedup_documents_stream(sc.stream_documents(spark, str(src)))
-    _run(sc.curated_append(stream, out, ck))
-    got = spark.read.parquet(out)
-    assert got.count() == 3  # the alpha re-crawl was dropped
-    texts = {r["text"] for r in got.select("text").collect()}
-    assert texts == {"alpha page", "beta page", "gamma page"}
-    kept_alpha = got.where(F.col("text") == "alpha page").collect()
-    assert len(kept_alpha) == 1 and kept_alpha[0]["doc_id"] == 1
 
 
 def test_curated_append_replay_is_idempotent(spark, doc_chunks, tmp_path):
@@ -332,80 +300,3 @@ def test_near_dup_replay_after_kill_between_store_and_index_writes(
     assert kept2 == [1, 2, 4]
 
 
-def test_index_compaction_preserves_decisions_and_prunes_layout(
-    spark, tmp_path
-):
-    """stream-then-compact (the module header's contract, implemented
-    r12): folding the _batch_id-partitioned delta index into the
-    band-partitioned base must (a) preserve the row multiset, (b) produce
-    a band-partitioned directory layout (bucket-join pruning restored),
-    (c) leave subsequent streamed batches making IDENTICAL admit
-    decisions through the base+delta reader."""
-    out = str(tmp_path / "store")
-    idx = str(tmp_path / "index")
-    base = str(tmp_path / "index_base")
-
-    def mkbatch(docs):
-        return spark.createDataFrame(
-            [(i, t, "en", "s") for i, t in docs], sc.DOC_STREAM_SCHEMA
-        )
-
-    sc.near_dup_write_batch(
-        mkbatch([(1, _BASE), (2, _OTHER)]), 0, out, idx, base_dir=base
-    )
-    before = sorted(
-        map(tuple, spark.read.parquet(idx).drop("_batch_id").collect())
-    )
-    n = sc.compact_minhash_index(spark, idx, base)
-    assert n == len(before)
-    assert not os.path.isdir(idx)  # delta cleared
-    # band-partitioned layout on disk
-    assert any(d.startswith("band=") for d in os.listdir(base))
-    after = sorted(map(tuple, spark.read.parquet(base).select(
-        "doc_id", "band", "bucket", "sig_v").collect()))
-    assert after == before
-    # next batch: 3 near-dups doc 1 (must be caught via the BASE), 4 novel
-    sc.near_dup_write_batch(
-        mkbatch([(3, _NEAR), (4, _OTHER_NEAR)]), 1, out, idx, base_dir=base
-    )
-    kept = sorted(
-        r["doc_id"] for r in spark.read.parquet(out).select("doc_id").collect()
-    )
-    assert kept == [1, 2, 4]
-    # second compaction folds base + new delta
-    n2 = sc.compact_minhash_index(spark, idx, base)
-    docs_in_base = sorted(
-        r["doc_id"]
-        for r in spark.read.parquet(base).select("doc_id").distinct().collect()
-    )
-    assert docs_in_base == [1, 2, 4] and n2 > n
-    # doc 6 near-dups doc 4 purely via the compacted base (no delta dir)
-    sc.near_dup_write_batch(
-        mkbatch([(6, _OTHER_NEAR)]), 2, out, idx, base_dir=base
-    )
-    kept2 = sorted(
-        r["doc_id"] for r in spark.read.parquet(out).select("doc_id").collect()
-    )
-    assert kept2 == [1, 2, 4]
-
-
-def test_index_compaction_refuses_mixed_sig_v(spark, tmp_path):
-    idx = str(tmp_path / "index")
-    good = spark.createDataFrame(
-        [(1, 0, "b0", 2, 0)],
-        "doc_id long, band int, bucket string, sig_v int, _batch_id int",
-    )
-    bad = spark.createDataFrame(
-        [(2, 0, "b1", 1, 1)],
-        "doc_id long, band int, bucket string, sig_v int, _batch_id int",
-    )
-    good.unionByName(bad).write.partitionBy("_batch_id").parquet(idx)
-    with pytest.raises(ValueError, match="mixed sig_v"):
-        sc.compact_minhash_index(spark, idx, str(tmp_path / "base"))
-
-
-def test_compaction_missing_everything_raises(spark, tmp_path):
-    with pytest.raises(FileNotFoundError):
-        sc.compact_minhash_index(
-            spark, str(tmp_path / "nope"), str(tmp_path / "nope_base")
-        )

@@ -56,25 +56,6 @@ def test_repetition_score_shape(spark):
     assert 3 not in out
 
 
-def test_unigram_lm_scores(spark):
-    """Corpus-typical docs score higher mean log-prob than rare-token docs;
-    smoothing keeps everything finite; ppl = exp(-avg_logprob)."""
-    rows = [
-        (1, "the cat sat on the mat"),
-        (2, "the dog sat on the mat"),
-        (3, "zyx qwv jkl pbn"),  # tokens that appear nowhere else
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in tx.unigram_lm_scores(df).collect()}
-    assert out[1]["n_tokens"] == 6 and out[3]["n_tokens"] == 4
-    # common-token docs are more "typical" than the rare-token doc
-    assert out[1]["avg_logprob"] > out[3]["avg_logprob"]
-    assert out[2]["avg_logprob"] > out[3]["avg_logprob"]
-    for r in out.values():
-        assert r["avg_logprob"] < 0
-        assert abs(r["ppl"] - pow(2.718281828459045, -r["avg_logprob"])) < 1e-6
-
-
 def test_mix_sources_deterministic_upsampling(spark):
     """floor(w) copies always; the fractional extra copy hits ~frac of docs
     (md5-selected, deterministic); weight 0 drops; absent sources keep 1."""

@@ -7,8 +7,6 @@ stage's per-row isolation."""
 
 import struct
 
-import pytest
-
 from kausaldb_spark.sources import video as vi
 
 
@@ -110,11 +108,6 @@ def test_video_classes_match_probe():
         for d in (k, k + 7, k + 7007):
             got = vi.probe_video_format(vi.synth_video(k, d))
             assert (got[0], got[1]) == (fmt, mode), (k, d, got)
-
-
-def test_decode_is_explicit_boundary():
-    with pytest.raises(NotImplementedError):
-        vi.decode_video_frames(vi.synth_video(0, 1))
 
 
 def test_video_probe_stage_row_isolation(spark):
